@@ -212,12 +212,7 @@ object Exporter {
     *            [--overrides '{"k":"v"}']  (or GRAFT_CE_OVERRIDES env) */
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(defaultCpus = 4, logLevel = "WARN")
     run(spark, cfg).foreach(d => println(s"delivered sent=${d.sent} failed=${d.failed}"))
     spark.stop()
   }

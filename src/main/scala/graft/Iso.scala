@@ -1,194 +1,41 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Scratch isolated-query timer (not part of the driver contract):
-  * `tools/run.sh graft.Iso <sfDir> <passes> <query...>` — min-of-N per
-  * query through the same noop-write methodology as Bench. NOTE: runs
-  * passes + 1 executions per query — the first is a WARM pass (reported
-  * separately, excluded from the min).
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.functions.col
+
+/** Diagnostic main (not part of the driver contract), three modes:
+  *  - `Iso <sfDir> <passes> <query...>`: isolated timer — min-of-N per
+  *    query through the same noop-write methodology as Bench. Runs
+  *    passes + 1 executions per query; the first is a WARM pass, reported
+  *    separately and excluded from the min. Duplicate names re-run, so
+  *    `k3_pagerank d_pr_noaqe k3_pagerank d_pr_noaqe` alternates the two
+  *    rows' samples inside one session and one host window.
+  *  - `Iso plan <sfDir> <outDir> <tag> <query...>`: writes each query's
+  *    `.explain("formatted")` to `<outDir>/<query>_<tag>.txt` — the
+  *    before/after plan evidence committed under plans/. Building a
+  *    DataFrame may run jobs (model training, CC loops); nothing is timed.
+  *  - `Iso recall <sfDir> [row...]`: recall@3 of the approximate ANN rows
+  *    against the exact cosine top-3 (l_cosine_topk) on the same corpus.
+  *    The oracle pins each row's deterministic output; this pins how much
+  *    of the exact answer the approximation retains, which only a
+  *    cross-row comparison can say.
+  *
+  * Every mode resolves a name through [[extras]], else SparkEntry.queries.
   */
 object Iso {
 
-  /** Diagnostic per-TERM plans (not driver rows): the keep1_apply sf30
-    * composition claim (r15 verdict task 2) pinned by measuring its two
-    * terms separately — the covered-set build (gram explode + canon
-    * min-struct aggregate + covered distinct) and the cut consumer fed a
-    * PRE-MATERIALIZED covered parquet (so the cut's timing carries none
-    * of the build). The materialization happens once, on the discarded
-    * warm pass. */
-  private val covCache =
-    collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  /** Diagnostic frames that are not driver rows. */
   private val extras: Map[String, SparkEntry.Q] = Map(
-    "d_keep1_covered" -> ((s, d) => LlmOps.dupSpanCoveredKeep1(s, d)),
-    "d_keep1_cut" -> ((s, d) => {
-      val p = covCache.getOrElseUpdate((s, d), {
-        // StreamingOps.tmp registers the dir for JVM-exit deletion — the
-        // covered set is 16.6M rows at sf30 and repeated measurement
-        // runs must not accumulate it in /tmp
-        val dir = graft.streaming.StreamingOps.tmp("iso-keep1-cov-")
-        LlmOps.dupSpanCoveredKeep1(s, d).write.mode("overwrite").parquet(dir)
-        dir
-      })
-      LlmOps.dupSpanCut(s, d, s.read.parquet(p))
-    }),
-    // RETIRED r20 spellings of the two queries the r21 optimization round
-    // restructured — kept as diagnostic rows so the plan-change claims
-    // stay re-measurable via a SAME-JVM interleaved A/B (pass e.g.
-    // `k3_chain d_chain_r20 k3_chain d_chain_r20` — duplicate names
-    // re-run, so old/new samples alternate inside one session and one
-    // host window; recompile-and-swap A/Bs on this box read window
-    // drift, not code).
-    "d_chain_r20" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ce = operators.CtsParity.toCloudEvents(
-        operators.CtsParity.eventsAsTraces(Tables.events(s, d)))
-      val e = operators.CtsParity.edges(ce)
-        .select(col("rel"), col("src_key"), col("dst_key"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      def hop(rel: String, src: String, dst: String) =
-        e.filter(col("rel") === rel)
-          .select(col("src_key").as(src), col("dst_key").as(dst))
-      hop("APPLIED_ON", "action", "resource")
-        .join(hop("MEMBER_OF", "resource2", "tenant"),
-          col("resource") === col("resource2"))
-        .join(hop("LOCATED_AT", "tenant2", "region"),
-          col("tenant") === col("tenant2"))
-        .groupBy(col("region"), col("tenant"))
-        .agg(count_distinct(col("action")).as("n_actions"),
-          count_distinct(col("resource")).as("n_resources"))
-        .orderBy(col("region"), col("tenant"))
-    }),
-    "d_array_fns_r20" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      Tables.lineitem(s, d)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_list(col("l_linenumber"))).as("lines"))
-        .select(
-          col("l_orderkey"),
-          array_join(col("lines"), ",").as("lines_csv"),
-          size(col("lines")).cast("long").as("n_lines"),
-          element_at(col("lines"), 1).as("first_line"),
-          array_contains(col("lines"), 1).as("has_line1"))
-        .orderBy(col("l_orderkey"))
-    }),
-    "d_sessionize_r20" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val W = org.apache.spark.sql.expressions.Window
-      val w = W.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val gapUs = 8L * 3600 * 1000000
-      val prevUs = lag(unix_micros(col("ts")), 1).over(w)
-      Tables.events(s, d)
-        .withColumn("new_s",
-          when(prevUs.isNull || unix_micros(col("ts")) - prevUs > gapUs, 1L)
-            .otherwise(0L))
-        .withColumn("session_idx", sum(col("new_s")).over(
-          w.rowsBetween(W.unboundedPreceding, W.currentRow)))
-        .groupBy(col("user_id"), col("session_idx"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ts")).as("session_start"),
-          max(col("ts")).as("session_end"),
-          sum(col("value")).as("sum_value"))
-        .orderBy(col("user_id"), col("session_idx"))
-    }),
-    "d_cdc_apply_r20" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val W = org.apache.spark.sql.expressions.Window
-      val log = Tables.events(s, d).select(
-        col("user_id"), col("ts"), col("event_id"), col("value"),
-        graft.Analytic.cdcOp.as("op"))
-      val wLatest = W.partitionBy(col("user_id"))
-        .orderBy(col("ts").desc, col("event_id").desc)
-      log.withColumn("rn", row_number().over(wLatest))
-        .withColumn("n_changes",
-          count(lit(1)).over(W.partitionBy(col("user_id"))))
-        .filter(col("rn") === 1 && col("op") =!= "D")
-        .select(col("user_id"), col("op").as("last_op"),
-          col("value").as("last_value"), col("ts").as("last_ts"),
-          col("n_changes"))
-        .orderBy(col("user_id"))
-    }),
-    // r22 k3_pagerank probes (VERDICT task 4): split the shared
-    // link/vertex build from the per-iteration cost, and A/B two
-    // spellings that attack the per-iteration lnk re-exchange the
-    // committed plan shows (Exchange over InMemoryTableScan per
-    // iteration — the AQE-cached plan reports no output partitioning,
-    // so ENSURE_REQUIREMENTS re-shuffles the cached link frame 4x).
+    // k3_pagerank probes (ROADMAP's sf10 k3_pagerank decision reads
+    // them): the shared link/vertex build alone, and the committed
+    // spelling with AQE off
     "d_pr_build" -> ((s, d) =>
       operators.CtsParity.pageRank(operators.CtsParity.linkPairs(
         operators.CtsParity.toCloudEvents(
           operators.CtsParity.eventsAsTraces(Tables.events(s, d)))), iters = 0)),
-    "d_pr_lckpt" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val ce = operators.CtsParity.toCloudEvents(
-        operators.CtsParity.eventsAsTraces(Tables.events(s, d)))
-      val links = operators.CtsParity.linkPairs(ce).select(
-          concat_ws("|", col("src_kind"), col("src_key")).as("src"),
-          concat_ws("|", col("dst_kind"), col("dst_key")).as("dst"))
-        .distinct()
-      // localCheckpoint instead of persist: LogicalRDD carries the
-      // executed plan's outputPartitioning, which an AQE-cached
-      // InMemoryRelation loses
-      val lnk = links.withColumn("outdeg",
-          count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("src"))))
-        .localCheckpoint()
-      val verts = lnk.select(col("src").as("node"))
-        .unionAll(lnk.select(col("dst").as("node")))
-        .distinct()
-        .localCheckpoint()
-      val zero = verts.select(col("node"), lit(0L).as("contrib"))
-      var ranks = verts.select(col("node"), lit(1000000000L).as("pr_fixed"))
-      for (_ <- 1 to 4) {
-        val contribs = lnk.hint("shuffle_hash")
-          .join(ranks, lnk("src") === ranks("node"))
-          .select(lnk("dst").as("node"), expr("pr_fixed div outdeg").as("contrib"))
-        ranks = contribs.unionAll(zero)
-          .groupBy(col("node"))
-          .agg(expr("CAST(150000000 + (85 * sum(contrib)) div 100 AS BIGINT)")
-            .as("pr_fixed"))
-      }
-      ranks.orderBy(col("pr_fixed").desc, col("node")).limit(20)
-        .select(col("node"), col("pr_fixed"),
-          (col("pr_fixed").cast("double") / lit(1.0e9)).as("pr"))
-    }),
-    // r22 maintained-index read-amplification probe (VERDICT task 6):
-    // drive the URL admission loop as 8 doc_id-ordered micro-batches
-    // (the StressCheck slicing) and print each batch's wall — batch N
-    // reads the N prior index dirs, so growth in batch-wall vs batch id
-    // IS the amplification. Prints diagnostics; the ISO line times the
-    // whole drive.
-    "d_url_multibatch" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val docsT = Tables.documents(s, d)
-      val idx = graft.streaming.StreamingOps.tmp("iso-url-idx-")
-      val adm = graft.streaming.StreamingOps.tmp("iso-url-admit-")
-      val B = 8
-      val idsEnd = docsT.agg(max(col("doc_id"))).head().getLong(0) + 1L
-      (0 until B).foreach { i =>
-        val t0 = System.nanoTime()
-        LlmOps.urlAdmitBatch(
-          docsT.filter(col("doc_id") >= lit(i * idsEnd / B) &&
-            col("doc_id") < lit((i + 1) * idsEnd / B)),
-          i.toLong, idx, adm)
-        println(f"URLBATCH $i wall=${(System.nanoTime() - t0) / 1e9}%.3f")
-      }
-      s.emptyDataFrame
-    }),
-    // r22 CC pass-count probe (VERDICT task 5): passes the production
-    // loop takes on the REAL near-dup graph vs an adversarial 512-chain —
-    // the large-star/small-star decision input (it pays >=2 joins/pass
-    // unconditionally, so it can only win if real pass counts were high).
-    "d_cc_passes" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      LlmOps.dedupLabels(s, d).write.format("noop").mode("overwrite").save()
-      println(s"CCPASSES real=${LlmOps.ccLastPasses.get()}")
-      val chain = s.range(0, 511).select(
-        (col("id") + 1).as("d1"), col("id").as("d2"))
-      LlmOps.connectedComponents(chain)
-        .write.format("noop").mode("overwrite").save()
-      println(s"CCPASSES chain512=${LlmOps.ccLastPasses.get()}")
-      s.emptyDataFrame
-    }),
     "d_pr_noaqe" -> ((s, d) => {
       val k = "spark.sql.adaptive.enabled"
       val old = s.conf.get(k)
@@ -198,36 +45,47 @@ object Iso {
       finally s.conf.set(k, old)
       s.emptyDataFrame
     }),
-    "d_clusters_r20" -> ((s, d) => {
-      import org.apache.spark.sql.functions._
-      val labels = LlmOps.dedupLabels(s, d)
-      val sized = labels.groupBy(col("label"))
-        .agg(count(lit(1)).as("n_members"))
-        .select(col("label").as("sz_label"), col("n_members"))
-      labels
-        .join(sized, col("label") === col("sz_label"))
-        .select(col("label").as("cluster_id"), col("v").as("doc_id"),
-          col("n_members"), (col("v") === col("label")).as("keep"))
-        .orderBy(col("cluster_id"), col("doc_id"))
+    // the urlAdmitBatch decision frame every s_url_dedup trigger executes
+    // (its plan lives inside foreachBatch, which no declared query's
+    // explain can show): the documents table as one arriving batch
+    // against a 50-row prior index, so the index-probe join is planned
+    "url_admit_decision" -> ((s, d) => {
+      val canon = LlmOps.urlCanonFrame(Tables.documents(s, d))
+      val seed = graft.streaming.StreamingOps.tmp("graft-iso-idx-")
+      canon.limit(50).write.mode("overwrite").parquet(seed)
+      LlmOps.urlAdmitDecision(canon, Seq(seed))
     }))
 
+  private def query(name: String): SparkEntry.Q =
+    extras.getOrElse(name, SparkEntry.queries(name))
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val passes = args(1).toInt
-    require(passes >= 1,
-      s"Iso needs passes >= 1 (got $passes): the first run is a discarded warm pass")
-    val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shuf = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val mode: SparkSession => Unit = args.toList match {
+      case "plan" :: sfDir :: outDir :: tag :: names =>
+        plan(_, sfDir, outDir, tag, names)
+      case "plan" :: _ =>
+        throw new IllegalArgumentException(
+          "usage: Iso plan <sfDir> <outDir> <tag> <query...>")
+      case "recall" :: sfDir :: rows =>
+        recall(_, sfDir,
+          if (rows.nonEmpty) rows else Seq("l_ann_lsh", "l_ivf_ann", "l_ivfpq_ann"))
+      case sfDir :: passes :: names =>
+        require(passes.toInt >= 1,
+          s"Iso needs passes >= 1 (got $passes): the first run is a discarded warm pass")
+        time(_, sfDir, passes.toInt, names)
+      case _ =>
+        throw new IllegalArgumentException(
+          "usage: Iso <sfDir> <passes> <query...> | Iso plan <sfDir> <outDir> " +
+            "<tag> <query...> | Iso recall <sfDir> [row...]")
+    }
+    val spark = GraftSession(defaultCpus = 32, logLevel = "ERROR")
+    try mode(spark) finally spark.stop()
+  }
+
+  private def time(spark: SparkSession, sfDir: String, passes: Int,
+                   names: Seq[String]): Unit =
     for (n <- names) {
-      val fn = extras.getOrElse(n, SparkEntry.queries(n))
+      val fn = query(n)
       val ts = (0 to passes).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -236,6 +94,35 @@ object Iso {
       }
       println(f"ISO $n min=${ts.tail.min}%.3f warm=${ts.head}%.3f all=${ts.tail.map(x => f"$x%.2f").mkString(",")}")
     }
-    spark.stop()
+
+  private def plan(spark: SparkSession, sfDir: String, outDir: String,
+                   tag: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    for (n <- names) {
+      val txt = query(n)(spark, sfDir).queryExecution
+        .explainString(ExplainMode.fromString("formatted"))
+      Files.write(Paths.get(s"$outDir/${n}_$tag.txt"),
+        txt.getBytes(StandardCharsets.UTF_8))
+      println(s"PLAN $n -> $outDir/${n}_$tag.txt")
+      spark.catalog.clearCache()
+    }
+  }
+
+  /** Prints one `RECALL <row> hits/total = r` line per approximate row. */
+  private def recall(spark: SparkSession, sfDir: String,
+                     rows: Seq[String]): Unit = {
+    def pairs(name: String): Set[(Long, Long)] = {
+      val p = query(name)(spark, sfDir)
+        .select(col("q_id").cast("long"), col("neighbor_id").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      spark.catalog.clearCache()
+      p
+    }
+    val exact = pairs("l_cosine_topk")
+    for (name <- rows) {
+      val approx = pairs(name)
+      val hit = exact.count(approx.contains)
+      println(f"RECALL $name%-14s $hit/${exact.size} = ${hit.toDouble / exact.size}%.3f")
+    }
   }
 }

@@ -684,7 +684,7 @@ object LlmOps {
   }
 
   /** (doc_id, url_canon) of one arriving batch — the canonicalized frame
-    * [[urlAdmitBatch]] decides over; shared with PlanDump so committed
+    * [[urlAdmitBatch]] decides over; shared with `Iso plan` so committed
     * plan evidence is generated by the production spelling. */
   private[graft] def urlCanonFrame(batch: DataFrame): DataFrame =
     withCanonicalUrl(docUrls(batch)).select(col("doc_id"), col("url_canon"))
@@ -692,7 +692,7 @@ object LlmOps {
   /** The per-batch admission DECISION frame of [[urlAdmitBatch]]:
     * (doc_id, url_canon, admitted, dup_of) for one canonicalized batch
     * against the index-so-far. Split out so the plan is inspectable
-    * (PlanDump) and testable outside a stream drain. */
+    * (`Iso plan`) and testable outside a stream drain. */
   private[graft] def urlAdmitDecision(canon: DataFrame,
                                       priorDirs: Seq[String]): DataFrame = {
     val s = canon.sparkSession
@@ -1316,51 +1316,30 @@ object LlmOps {
     * OCCUPANCY — a 4^8 code space cannot order arbitrarily many
     * same-cell candidates, so as the corpus grows 10× per cell the true
     * top-3's odds of falling outside a FIXED shortlist grow with it:
-    * measured by Recall at sf10 (~25k vectors/cell), R=256 held 0.400
+    * measured by `Iso recall` at sf10 (~25k vectors/cell), R=256 held 0.400
     * vs the 0.667 IVF probe ceiling while R=1024 recovered the FULL
     * ceiling. The DEFAULT therefore derives R from the trained cell
     * histogram at index-build time — R = max(256, ceil(maxOcc / 25)),
     * the survey's measured rule — persisted with the index (`_meta`)
     * and read back by the serving scorer; the oracle computes the SAME
-    * formula from its own assignment CTE, so the default stays
-    * hash-verified at every SF without anyone exporting a knob. The
-    * env/prop override remains for A/B sweeps and is parsed DEFENSIVELY
-    * at each read (r19 ADVICE: the static-val `.toInt` crashed
-    * class-load opaquely on a malformed value and silently ignored
-    * post-load changes). */
-  private[graft] def ivfPqRerankOverride: Option[Int] =
-    sys.props.get("graft.ivfpq.rerank")
-      .orElse(sys.env.get("GRAFT_IVFPQ_RERANK"))
-      .map { v =>
-        val n =
-          try v.trim.toInt
-          catch { case e: NumberFormatException =>
-            throw new IllegalArgumentException(
-              s"graft.ivfpq.rerank / GRAFT_IVFPQ_RERANK must be a positive " +
-                s"int, got '$v'", e)
-          }
-        require(n > 0,
-          s"graft.ivfpq.rerank / GRAFT_IVFPQ_RERANK must be positive, got $n")
-        n
-      }
-
-  /** The occupancy rule: shortlist ≈ maxOccupancy/25, floored at the
+    * formula from its own assignment CTE, so the rule stays
+    * hash-verified at every SF.
+    *
+    * The occupancy rule: shortlist ≈ maxOccupancy/25, floored at the
     * measured-safe 256 (sf1's 2.5k/cell sits at the recall ceiling
     * there; sf10's ~25k/cell derives ~1024 — exactly the value the r19
     * sweep showed recovers the probe ceiling). */
   private[graft] def ivfPqRerankFor(maxOccupancy: Long): Int =
     math.max(256L, math.ceil(maxOccupancy / 25.0).toLong).toInt
 
-  /** Rerank bound for an index frame: the override if set, else the
-    * occupancy rule over the index's cell histogram (one skinny
-    * map-side-combined aggregate — cells, never vectors, at the
-    * driver). */
-  private def ivfPqRerankOf(index: DataFrame): Int =
-    ivfPqRerankOverride.getOrElse {
-      val occ = index.groupBy(col("cell")).agg(count(lit(1)).as("n"))
-        .agg(max(col("n"))).head().getLong(0)
-      ivfPqRerankFor(occ)
-    }
+  /** Rerank bound for an index frame: the occupancy rule over the
+    * index's cell histogram (one skinny map-side-combined aggregate —
+    * cells, never vectors, at the driver). */
+  private def ivfPqRerankOf(index: DataFrame): Int = {
+    val occ = index.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+      .agg(max(col("n"))).head().getLong(0)
+    ivfPqRerankFor(occ)
+  }
 
   /** Corpus frame (vec_id, embedding, nrm, qe) plus the two
     * DRIVER-RESIDENT codebooks (kilobytes — the broadcast-codebook
@@ -1585,11 +1564,11 @@ object LlmOps {
     import graft.functions.HashExprs.vecDot
     val index = s.read.parquet(indexDir)
     val (e, cents, cb) = prep
-    // serving R: the live override wins (A/B seam), else the bound the
-    // index was BUILT with (`_meta`), else — for a pre-meta index — the
-    // occupancy rule recomputed from the index itself. Resolved once at
-    // scorer construction, like the codebook collects.
-    val rerank = ivfPqRerankOverride.getOrElse {
+    // serving R: the bound the index was BUILT with (`_meta`), else —
+    // for a pre-meta index — the occupancy rule recomputed from the
+    // index itself. Resolved once at scorer construction, like the
+    // codebook collects.
+    val rerank = {
       val metaPath = new org.apache.hadoop.fs.Path(s"$indexDir/_meta")
       val fs = metaPath.getFileSystem(s.sparkContext.hadoopConfiguration)
       if (fs.exists(metaPath))
@@ -1637,12 +1616,10 @@ object LlmOps {
   // Merge application is the BpeKernels greedy left-to-right pass (one
   // pass per merge, the reference merge_vocab semantics — see
   // functions/BpeExprs.scala for the algorithm and the oracle
-  // equivalence proof); K is env-tunable and defaults to a credible 64
-  // rounds (r17 verdict task 5 — the chained-replace column tree this
-  // replaces grew the plan linearly in K).
-  private[graft] final val BPE_ROUNDS: Int =
-    sys.props.get("graft.bpe.rounds")
-      .orElse(sys.env.get("GRAFT_BPE_ROUNDS")).map(_.toInt).getOrElse(64)
+  // equivalence proof); K is a credible 64 rounds (r17 verdict task 5 —
+  // the chained-replace column tree this replaces grew the plan linearly
+  // in K), and the oracle replays exactly K rounds.
+  private[graft] final val BPE_ROUNDS = 64
   // truncate train-loop lineage every N rounds: between checkpoints the
   // round state chains LAZILY (≤ N kernel passes recomputed over the
   // last checkpoint — vocab-sized, trivial), so plan shapes CYCLE with
@@ -1699,7 +1676,7 @@ object LlmOps {
     * collect before learning), while the distributed loop pays a
     * job-launch + aggregate round-trip PER MERGE — at a production
     * K=30k that is 30k sequential Spark jobs over a vocab-sized frame,
-    * pure scheduler overhead. Measured (BpeProbe, K=1024, sf10 =
+    * pure scheduler overhead. Measured (K=1024, sf10 =
     * 500k-doc corpus, 3,100-word vocab): distributed 126.4 s (~0.116 s/round
     * scheduler floor), local 8.6 s end-to-end — 14.8×, identical
     * learned merges, and the gap grows linearly in K (SURVEY §8.6).
@@ -1711,29 +1688,26 @@ object LlmOps {
     * identical merges again — local wins 2.7× at 300k words, so the
     * single-node crossover by WIDTH does not exist. The real switch
     * point is driver MEMORY, not speed: the collect is ~100 B/word
-    * (~30 MB at 300k words, ~10 GB at 100M), so flip
-    * `graft.bpe.distributed` when the (word, count) table approaches
+    * (~30 MB at 300k words, ~10 GB at 100M), so switch to
+    * [[bpeTrainDistributed]] when the (word, count) table approaches
     * driver heap — or on a real cluster, when per-round local work
     * (~0.9 µs × vocab) dwarfs a parallel aggregate's floor, which at
     * K=30k production rounds means vocabularies past ~10M words.
-    * The distributed loop is kept under
-    * `graft.bpe.distributed` for the equality spec + A/B; both paths
+    * The distributed loop is kept as the reference the equality spec
+    * compares against; both paths
     * fold merges with the SAME BpeKernels functions, so they cannot
     * drift (LlmOpsSpec pins bit-equality at K=24 and through
     * saturation at K=128; the shared DuckDB oracle re-proves the local
     * path end-to-end every round). Encode is unchanged: the kernel
     * scorer stays fully distributed and constant-size in K. */
   private[graft] def bpeTrainCompute(s: SparkSession, d: String,
-      rounds: Int = BPE_ROUNDS): Seq[(Int, String, String, Long)] =
-    if (sys.props.contains("graft.bpe.distributed"))
-      bpeTrainDistributed(s, d, rounds)
-    else {
-      // column pruning drops the syms kernel column from the collect —
-      // only (w, n) strings ride to the driver
-      val words = bpeWords(s, d).select(col("w"), col("n")).collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      bpeLearnLocal(words, rounds)
-    }
+      rounds: Int = BPE_ROUNDS): Seq[(Int, String, String, Long)] = {
+    // column pruning drops the syms kernel column from the collect —
+    // only (w, n) strings ride to the driver
+    val words = bpeWords(s, d).select(col("w"), col("n")).collect()
+      .map(r => (r.getString(0), r.getLong(1)))
+    bpeLearnLocal(words, rounds)
+  }
 
   /** The K-round greedy merge learner over an in-memory word-frequency
     * table. Reuses the EXACT distributed kernels (BpeKernels.initSyms /
@@ -1795,7 +1769,6 @@ object LlmOps {
     * use if the vocabulary ever outgrew the driver. */
   private[graft] def bpeTrainDistributed(s: SparkSession, d: String,
       rounds: Int = BPE_ROUNDS): Seq[(Int, String, String, Long)] = {
-    val dbg = sys.props.contains("graft.bpe.debug")
     // round-0 state materialized lineage-free; each later checkpoint
     // frees its predecessor's blocks deterministically (checkpointRdd)
     var cur = bpeWords(s, d).localCheckpoint(true)
@@ -1806,7 +1779,6 @@ object LlmOps {
       var r = 1
       var saturated = false
       while (r <= rounds && !saturated) {
-        val t0 = System.nanoTime()
         val syms = col("syms")
         val pairs = zip_with(
           slice(syms, lit(1), size(syms) - 1),
@@ -1839,7 +1811,6 @@ object LlmOps {
               depth = 0
             }
           }
-          if (dbg) println(f"[bpe] round $r ${(System.nanoTime() - t0) / 1e9}%.3f s ($a,$b)=$cnt")
         }
         r += 1
       }
@@ -2368,17 +2339,8 @@ object LlmOps {
     // one real cluster — fail loudly instead
     require(changed == 0L,
       s"connectedComponents: label propagation did not converge within $iters passes")
-    // diagnostic only (r22 VERDICT task 5): how many passes the LAST CC
-    // run took — read by the Iso probes to decide whether a
-    // large-star/small-star rewrite could reduce pass count (it cannot
-    // when the dominant graphs converge in 1 verification pass)
-    ccLastPasses.set(iters)
     labels
   }
-
-  /** Pass count of the most recent [[connectedComponents]] run —
-    * measurement seam only, no query reads it. */
-  private[graft] val ccLastPasses = new java.util.concurrent.atomic.AtomicInteger(-1)
 
   private[graft] def dedupLabels(s: SparkSession, d: String): DataFrame =
     connectedComponents(nearDupPairs(s, d).select(col("d1"), col("d2")))
@@ -4749,6 +4711,12 @@ object LlmOps {
         s"""list_reduce(list_prepend(0.0::DOUBLE,
            |      list_transform($a, (x, i) -> CAST(x AS DOUBLE) * CAST($b[i] AS DOUBLE))),
            |      (a, b) -> a + b)""".stripMargin
+      // the engine's occupancy rule replayed over the oracle's own
+      // assignment CTE: max cell count / 25, floored at 256
+      val occupancyRerank =
+        "(SELECT greatest(256, CAST(ceil(CAST(max(cnt) AS DOUBLE)" +
+          " / 25.0) AS BIGINT)) FROM" +
+          " (SELECT cell, count(*) AS cnt FROM asn GROUP BY cell))"
       s"""WITH e AS (
          |  SELECT vec_id, embedding,
          |    sqrt(${sqlDot("embedding", "embedding")}) AS nrm
@@ -4807,13 +4775,7 @@ object LlmOps {
          |    SELECT q_id, neighbor_id,
          |      row_number() OVER (PARTITION BY q_id
          |        ORDER BY adc_dist, neighbor_id) AS srn
-         |    FROM scored) WHERE srn <= ${ivfPqRerankOverride
-               .map(_.toString).getOrElse(
-                 // the engine's occupancy rule replayed over the oracle's
-                 // own assignment CTE: max cell count / 25, floored at 256
-                 "(SELECT greatest(256, CAST(ceil(CAST(max(cnt) AS DOUBLE)" +
-                 " / 25.0) AS BIGINT)) FROM" +
-                 " (SELECT cell, count(*) AS cnt FROM asn GROUP BY cell))")}
+         |    FROM scored) WHERE srn <= $occupancyRerank
          |), rerank AS (
          |  SELECT s.q_id, s.neighbor_id,
          |    ${sqlDot("eq.embedding", "en.embedding")} / (eq.nrm * en.nrm) AS cosine

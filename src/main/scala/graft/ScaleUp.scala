@@ -63,15 +63,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = args(0); val dst = args(1); val n = args(2).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(defaultCpus = 32, logLevel = "WARN")
     run(spark, src, dst, n)
     println(s"""{"scaled": "$src -> $dst", "factor": $n}""")
     spark.stop()

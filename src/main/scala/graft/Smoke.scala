@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local replica of the driver's smoke check: `SparkEntry.entry` on
   * sf0.001 must return >0 rows. Usage: tools/run.sh graft.Smoke [sfDir]
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(defaultCpus = 4, logLevel = "WARN")
     require(sfDir.startsWith("/root/testdata/"), s"unexpected sfDir $sfDir")
     val df = SparkEntry.entry(spark)
     val n = df.count()

@@ -540,15 +540,9 @@ object StressCheck {
     // SPARK_GRAFT_SHUFFLE: per-task state (non-spillable shuffle-hash
     // builds, e.g. pageRank's hinted join over the sf30 link table) must
     // FIT memory — sizing shuffle partitions to the SF is the standard
-    // scale knob (32 is right through sf10; sf30 runs use 128)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.driver.memory", sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-      .withExtensions(new functions.GraftExtensions)
-      .appName("graft-stress-check").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // scale knob (32 is right through sf10; sf30 runs use 128). Driver
+    // heap is the launcher's -Xmx (tools/run.sh: SPARK_DRIVER_MEM).
+    val spark = GraftSession(defaultCpus = 32, logLevel = "WARN")
     val rs = run(spark, d, args.drop(1).toSet)
     // a misspelled filter name must not read as a green gate ("0/0 pass",
     // exit 0, zero invariants executed)

@@ -7,9 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SQL-surface registration for graft's native expressions, so
   * `spark.sql("SELECT graft_poly_hash(text) ...")` works like a built-in.
   *
-  * Wire up with `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
-  * at session build (the standard injection point), or post-hoc on an
-  * existing session via [[org.apache.spark.sql.GraftSqlBridge.registerFunctions]].
+  * Every graft main gets it from [[graft.GraftSession]] (the standard
+  * `withExtensions` injection point at session build); an existing
+  * session registers post-hoc via
+  * [[org.apache.spark.sql.GraftSqlBridge.registerFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =

@@ -162,7 +162,8 @@ object CtsParity {
     * (localCheckpoint, which carries partitioning) won 0.67× at sf0.1 but
     * OOM'd the hash-map build at sf10 under 8 AND 16 GB driver heaps
     * (32 concurrent fixed-width builds, no AQE sizing), and was REVERTED
-    * — re-measurable via the Iso rows d_pr_build/d_pr_lckpt/d_pr_noaqe.
+    * (evidence: OPTIMIZATION_r22.md, plans/r22; the build/AQE split stays
+    * re-measurable via the Iso rows d_pr_build/d_pr_noaqe).
     * Dangling-in vertices are handled by unioning a (node, 0) frame into
     * the same dst-keyed aggregate instead of a join-back (a left join
     * per iteration would be a second and third exchange — measured 3×

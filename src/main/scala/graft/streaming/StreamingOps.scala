@@ -203,75 +203,6 @@ object StreamingOps {
     p.toString
   }
 
-  /** Bind the state-store provider choice to the session before a
-    * stream starts (the conf is read per-query at `.start()`).
-    * `GRAFT_STATE_STORE=rocksdb` swaps the default on-heap
-    * HDFSBackedStateStoreProvider for RocksDB; `=hdfs` pins the default
-    * explicitly; unset leaves Spark's default. Why it exists: at 100 TB
-    * the stream-stream join rows (`s_stream_join`/`s_stream_outer`, the
-    * heaviest streaming rows at every tier) hold join state on executor
-    * heap, which OOMs when state outgrows memory — RocksDB keeps state
-    * on local disk with bounded heap. Env-gated so the SURVEY §8.6 A/B
-    * measures both providers on identical code, and the adoption
-    * decision is recorded there rather than hard-coded. */
-  /** Sessions whose provider conf THIS seam last set — the None branch
-    * unsets only those, so a provider an operator pinned directly via
-    * Spark conf / spark-submit (outside GRAFT_STATE_STORE) survives a
-    * drain with the knob unset (r18 ADVICE: the unconditional unset
-    * silently discarded externally-set providers). */
-  // WEAK keys (r19 ADVICE): a strong set held stopped sessions (and their
-  // conf graphs) for the life of the JVM in long-lived multi-session
-  // processes. WeakHashMap is not thread-safe — synchronizedSet wraps it;
-  // contention is nil (one add/remove per stream start).
-  private val stateStoreSetBy =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[SparkSession, java.lang.Boolean]()))
-
-  private def stateStoreConf(s: SparkSession): Unit = {
-    val pkg = "org.apache.spark.sql.execution.streaming.state"
-    val changelog = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    // system property first (settable in-process — the RocksDB
-    // equivalence spec), env var for the CLI harnesses (Iso/Bench).
-    // Session conf is STICKY across streams: every branch pins BOTH
-    // knobs (provider + changelog flag) so an earlier rocksdb-changelog
-    // run in the same session cannot leak into a later plain run and
-    // contaminate the A/B this seam exists to serve (r17 ADVICE).
-    sys.props.get("graft.stateStore")
-      .orElse(sys.env.get("GRAFT_STATE_STORE")).map(_.toLowerCase) match {
-      case Some("rocksdb") =>
-        stateStoreSetBy.add(s)
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          s"$pkg.RocksDBStateStoreProvider")
-        s.conf.set(changelog, "false")
-      // changelog checkpointing: per-batch upload becomes the delta, not
-      // a full snapshot — the standard knob for RocksDB's per-batch
-      // maintenance cost (measured in the §8.6 A/B)
-      case Some("rocksdb-changelog") =>
-        stateStoreSetBy.add(s)
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          s"$pkg.RocksDBStateStoreProvider")
-        s.conf.set(changelog, "true")
-      case Some("hdfs") =>
-        stateStoreSetBy.add(s)
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          s"$pkg.HDFSBackedStateStoreProvider")
-        s.conf.set(changelog, "false")
-      // a typo'd provider name must not silently run the default store
-      // while the operator believes RocksDB is active
-      case Some(other) => throw new IllegalArgumentException(
-        s"GRAFT_STATE_STORE=$other: expected rocksdb|rocksdb-changelog|hdfs")
-      case None =>
-        // only undo what THIS seam set: an externally-pinned provider
-        // (Spark conf / spark-submit) is not ours to discard
-        if (stateStoreSetBy.remove(s)) {
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          s.conf.unset(changelog)
-        }
-    }
-  }
-
   /** Bytes on disk behind a streaming frame's file sources, read off the
     * plan's StreamingRelation leaves (honoring each source's
     * pathGlobFilter, so a glob-filtered sf-dir source counts only its
@@ -323,12 +254,8 @@ object StreamingOps {
     * cut used 32 MB and regressed s_stream_join at sf1 10.7 -> 70 s by
     * single-partitioning a 2×20 MB feed whose join compute — not the
     * per-partition fixed cost — dominates there; 4 MB restores the
-    * parallelism: see OPTIMIZATION_r22.md). Env/prop-tunable so a
-    * deployment can re-derive it from its own operator cost profile. */
-  private[graft] def DrainTargetBytesPerPartition: Long =
-    sys.props.get("graft.drain.targetBytes")
-      .orElse(sys.env.get("GRAFT_DRAIN_TARGET_BYTES"))
-      .map(_.toLong).getOrElse(4L << 20)
+    * parallelism: see OPTIMIZATION_r22.md). */
+  private[graft] final val DrainTargetBytesPerPartition: Long = 4L << 20
 
   /** Data-size-derived shuffle/state-partition count for ONE drain
     * (guide §2.2 — size partitions by bytes, never by core count): a
@@ -362,13 +289,7 @@ object StreamingOps {
   private[graft] def withDrainParallelism[T](df: DataFrame)(body: => T): T = {
     val s = df.sparkSession
     val key = "spark.sql.shuffle.partitions"
-    // kill switch (system property for in-process A/Bs, env for the CLI
-    // harnesses): GRAFT_DRAIN_ADAPTIVE=0 drains at the raw session
-    // parallelism — the pre-r22 behavior — so the derived-count win stays
-    // re-measurable on one binary instead of a recompile-and-swap A/B
-    val adaptiveOn = sys.props.get("graft.drain.adaptive")
-      .orElse(sys.env.get("GRAFT_DRAIN_ADAPTIVE")).forall(_ != "0")
-    val bytes = if (adaptiveOn) feedBytes(df) else -1L
+    val bytes = feedBytes(df)
     if (bytes < 0) body
     else {
       val session = try s.conf.get(key).toInt
@@ -389,7 +310,6 @@ object StreamingOps {
     * the sink root for batch re-read. */
   private[graft] def drainToParquet(df: DataFrame, mode: String): String = {
     val out = tmp("graft-sink-")
-    stateStoreConf(df.sparkSession)
     withDrainParallelism(df) {
       df.writeStream
         .option("checkpointLocation", tmp("graft-ckpt-"))
@@ -471,7 +391,6 @@ object StreamingOps {
     * [[readDrained]]. */
   private def drainMapped(stream: DataFrame, f: DataFrame => DataFrame): DataFrame = {
     val out = tmp("graft-sink-")
-    stateStoreConf(stream.sparkSession)
     withDrainParallelism(stream) {
       stream.writeStream
         .option("checkpointLocation", tmp("graft-ckpt-"))
@@ -535,7 +454,6 @@ object StreamingOps {
   private def drainUpsert(stream: DataFrame, rows: DataFrame => DataFrame,
                           keys: Seq[String]): DataFrame = {
     val stateDir = tmp("graft-graph-")
-    stateStoreConf(stream.sparkSession)
     withDrainParallelism(stream) {
       stream.writeStream
         .option("checkpointLocation", tmp("graft-ckpt-"))
@@ -867,7 +785,6 @@ object StreamingOps {
   private[graft] def cdcApplyInto(stream: DataFrame, stateDir: String,
                                   checkpointDir: String = null): String = {
     val s = stream.sparkSession
-    stateStoreConf(s)
     withDrainParallelism(stream) {
       stream.writeStream
         .option("checkpointLocation",

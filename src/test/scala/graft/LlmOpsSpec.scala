@@ -113,7 +113,7 @@ class LlmOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("ivfpq rerank: occupancy rule, defensive knob parse, persisted meta") {
+  test("ivfpq rerank: occupancy rule, persisted meta") {
     // the occupancy rule the r19 sf10 sweep measured: 2.5k/cell sits at
     // the ceiling on the 256 floor, 25k/cell derives the ~1k that
     // recovers it
@@ -121,18 +121,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(LlmOps.ivfPqRerankFor(2500L) === 256)
     assert(LlmOps.ivfPqRerankFor(25000L) === 1000)
     assert(LlmOps.ivfPqRerankFor(1000000L) === 40000)
-    // knob parse: read per call (post-load changes visible), failures
-    // name the knob instead of crashing class-load opaquely
-    try {
-      sys.props("graft.ivfpq.rerank") = "64"
-      assert(LlmOps.ivfPqRerankOverride === Some(64))
-      sys.props("graft.ivfpq.rerank") = "not-a-number"
-      val e1 = intercept[IllegalArgumentException](LlmOps.ivfPqRerankOverride)
-      assert(e1.getMessage.contains("GRAFT_IVFPQ_RERANK"))
-      sys.props("graft.ivfpq.rerank") = "-3"
-      val e2 = intercept[IllegalArgumentException](LlmOps.ivfPqRerankOverride)
-      assert(e2.getMessage.contains("positive"))
-    } finally sys.props.remove("graft.ivfpq.rerank")
     // the trained index persists its computed bound under _meta, and the
     // underscore keeps it invisible to plain index readers
     val dir = graft.streaming.StreamingOps.tmp("spec-ivfpq-")
@@ -145,19 +133,6 @@ class LlmOpsSpec extends AnyFunSuite {
     assert(!index.columns.contains("rerank"),
       "the _meta sidecar leaked into the index read")
     assert(index.count() === Tables.embeddings(spark, d).count())
-    // an index trained UNDER a live override still persists the
-    // occupancy-rule value: the override is a serve-time knob, and
-    // baking it into _meta would diverge from the oracle's
-    // override-or-occupancy fallback once the override is unset
-    val dir2 = graft.streaming.StreamingOps.tmp("spec-ivfpq2-")
-    try {
-      sys.props("graft.ivfpq.rerank") = "64"
-      LlmOps.trainIvfPqIndex(spark, d, dir2)
-    } finally sys.props.remove("graft.ivfpq.rerank")
-    val meta2 = spark.read.parquet(s"$dir2/_meta").head()
-    assert(meta2.getAs[Long]("rerank") ===
-      LlmOps.ivfPqRerankFor(meta2.getAs[Long]("max_occupancy")).toLong,
-      "_meta must carry the occupancy-rule value, not a transient override")
   }
 
   test("exact dedup collapses every mirrored doc into a 2-copy group") {
@@ -944,10 +919,7 @@ class LlmOpsSpec extends AnyFunSuite {
       docs.toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$dir/documents.parquet")
       val loc = LlmOps.bpeTrainCompute(spark, dir, rounds = 12)
-      sys.props("graft.bpe.distributed") = "1"
-      val dist =
-        try LlmOps.bpeTrainCompute(spark, dir, rounds = 12)
-        finally sys.props.remove("graft.bpe.distributed")
+      val dist = LlmOps.bpeTrainDistributed(spark, dir, rounds = 12)
       assert(loc == dist, s"corpus $c (${words.take(6)}...): local $loc != distributed $dist")
     }
   }
@@ -989,9 +961,9 @@ class LlmOpsSpec extends AnyFunSuite {
   test("BPE training: deterministic merges with non-increasing pair counts") {
     val m1 = run("l_bpe_train").collect()
     // ≤, not ==: training legitimately SATURATES below BPE_ROUNDS when
-    // no pair remains (a raised GRAFT_BPE_ROUNDS or a smaller fixture —
-    // r18 ADVICE). Exactness is pinned below on an explicit small round
-    // count the fixture cannot saturate at.
+    // no pair remains (a smaller fixture — r18 ADVICE). Exactness is
+    // pinned below on an explicit small round count the fixture cannot
+    // saturate at.
     assert(m1.length <= LlmOps.BPE_ROUNDS, "at most one row per merge round")
     assert(m1.nonEmpty, "fixture trained zero merges — proves nothing")
     // pinned-rounds exactness: the fixture has far more than 8 merge
@@ -1021,10 +993,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // round with the same final merge)
     for (k <- Seq(24, 128)) {
       val loc = LlmOps.bpeTrainCompute(spark, TestSpark.sfDir, rounds = k)
-      sys.props("graft.bpe.distributed") = "1"
-      val dist =
-        try LlmOps.bpeTrainCompute(spark, TestSpark.sfDir, rounds = k)
-        finally sys.props.remove("graft.bpe.distributed")
+      val dist = LlmOps.bpeTrainDistributed(spark, TestSpark.sfDir, rounds = k)
       assert(loc == dist, s"local/distributed learners diverged at K=$k")
       if (k == 128) assert(loc.length < 128,
         "K=128 was expected to SATURATE on this fixture — raise K or shrink it")

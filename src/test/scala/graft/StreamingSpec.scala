@@ -379,7 +379,11 @@ class StreamingSpec extends AnyFunSuite {
     val want = rows.map(n =>
       n -> StreamingOps.queries(n)(spark, TestSpark.sfDir)
         .collect().map(_.toSeq).toSeq).toMap
-    sys.props("graft.stateStore") = "rocksdb"
+    // the provider is a plain Spark conf, read per query at `.start()`
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
       for (n <- rows) {
         val got = StreamingOps.queries(n)(spark, TestSpark.sfDir)
@@ -390,42 +394,10 @@ class StreamingSpec extends AnyFunSuite {
       }
       // the conf actually bound — otherwise this test silently compared
       // the default provider to itself
-      assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
-        .contains("RocksDBStateStoreProvider"))
-    } finally {
-      sys.props.remove("graft.stateStore")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-    }
-  }
-
-  test("state-store seam: sticky conf resets and typos fail loudly") {
-    // r17 ADVICE: session conf survives across streams, so one
-    // rocksdb-changelog run must not leak the changelog flag into a
-    // later plain-rocksdb (or unset) run, and an unrecognized value must
-    // throw, not silently run the default provider.
-    val changelog = "spark.sql.streaming.stateStore.rocksdb." +
-      "changelogCheckpointing.enabled"
-    try {
-      sys.props("graft.stateStore") = "rocksdb-changelog"
-      StreamingOps.queries("s_dedup")(spark, TestSpark.sfDir).collect()
-      assert(spark.conf.get(changelog) == "true")
-      sys.props("graft.stateStore") = "rocksdb"
-      StreamingOps.queries("s_dedup")(spark, TestSpark.sfDir).collect()
-      assert(spark.conf.get(changelog) == "false",
-        "changelog flag leaked from the previous rocksdb-changelog run")
-      sys.props("graft.stateStore") = "bogus-provider"
-      val e = intercept[IllegalArgumentException] {
-        StreamingOps.queries("s_dedup")(spark, TestSpark.sfDir).collect()
-      }
-      assert(e.getMessage.contains("bogus-provider"))
-    } finally {
-      sys.props.remove("graft.stateStore")
-      // one unset-path run restores the session default for later suites
-      StreamingOps.queries("s_dedup")(spark, TestSpark.sfDir).collect()
-      assert(!spark.conf.getOption(
-        "spark.sql.streaming.stateStore.providerClass")
-        .exists(_.contains("RocksDB")))
+      assert(spark.conf.get(key).contains("RocksDBStateStoreProvider"))
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
     }
   }
 

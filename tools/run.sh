@@ -9,9 +9,9 @@ CLS="$1"; shift
 # not dirty-stamp the next artifact — the stamp binds artifact to CODE.
 # The probed repo honors SPARK_GRAFT_REPO (the same seam Bench.gitSha
 # reads), falling back to this script's own checkout.
-GRAFT_REPO="${SPARK_GRAFT_REPO:-$(cd "$(dirname "$0")/.." && pwd)}"
+repo="${SPARK_GRAFT_REPO:-$(cd "$(dirname "$0")/.." && pwd)}"
 if [ -z "${SPARK_GRAFT_DIRTY+x}" ] && command -v git >/dev/null 2>&1 \
-   && [ -n "$(git -C "$GRAFT_REPO" status --porcelain -- src project build.sbt tools 2>/dev/null)" ]; then
+   && [ -n "$(git -C "$repo" status --porcelain -- src project build.sbt tools 2>/dev/null)" ]; then
   export SPARK_GRAFT_DIRTY=1
 fi
 exec java \
@@ -30,5 +30,5 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
-  -cp "$GRAFT_REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$repo/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
