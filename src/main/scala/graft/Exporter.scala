@@ -138,20 +138,23 @@ object Exporter {
       val traces = spark.readStream.format("cts")
         .option("pages", cfg.pages).option("limit", cfg.limit).load()
       val ce = toCloudEvents(windowed(traces, cfg), cfg.overrides)
-      if (cfg.pushAndPull) {
-        val sd = CloudEventSink.deliverStream(ce, transport,
-          java.nio.file.Files.createTempDirectory("exporter-ckpt-").toString)
-        sd.query.awaitTermination()
-        Some(sd.delivery)
-      } else {
-        val q = ce.writeStream.format("console")
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory("exporter-ckpt-").toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        None
-      }
+      // each cycle drains from the head into its own checkpoint, deleted
+      // once the query has terminated so a looping exporter leaves none
+      val ckpt = java.nio.file.Files.createTempDirectory("exporter-ckpt-")
+      try {
+        if (cfg.pushAndPull) {
+          val sd = CloudEventSink.deliverStream(ce, transport, ckpt.toString)
+          sd.query.awaitTermination()
+          Some(sd.delivery)
+        } else {
+          val q = ce.writeStream.format("console")
+            .option("checkpointLocation", ckpt.toString)
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            .start()
+          q.awaitTermination()
+          None
+        }
+      } finally graft.streaming.StreamingOps.deleteTree(ckpt)
     }
   }
 

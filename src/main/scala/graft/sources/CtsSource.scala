@@ -55,6 +55,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - the driver only walks the (tiny) marker chain; page BODIES are
   *    parsed by executors in parallel, one page per InputPartition —
   *    the Go adapter accumulates all pages in one goroutine;
+  *  - the chain is walked once per scan, and a stream walks it once and
+  *    then only re-fetches its tail page per trigger, so a poll costs
+  *    two endpoint requests per page (the walk's and the read's). The
+  *    walk keeps only markers: shipping the walked bodies inside the
+  *    partitions would save the read, but then every page is fetched
+  *    serially on the driver instead of in parallel on the executors,
+  *    which made a 40-page poll slower, not faster;
   *  - the server-side From/To time filter (adapter.go:98-100) is a
   *    pushed-down predicate (`SupportsPushDownFilters` on `time`), so
   *    Catalyst stops re-filtering what the "server" already filtered;
@@ -206,21 +213,31 @@ object CtsSource {
     n.asInt()
   }
 
-  /** Follow the marker chain from the head — the driver-side page walk
-    * (adapter.go:106-130). Only markers are consumed here; over HTTP the
-    * server still ships whole pages (the CTS list API has no
-    * marker-only call — the Go adapter re-reads full pages too), so the
-    * walk costs one chain pass of envelope transfer per planning. */
-  def walkMarkers(dir: String, token: Option[String] = None): Vector[String] = {
+  /** The continuation marker a page envelope points at; empty at the end
+    * of the chain (adapter.go:125-129). */
+  def nextMarker(page: JsonNode): String =
+    page.path("meta_data").path("marker").asText("")
+
+  /** Follow the marker chain from `start` (the head by default) — the
+    * driver-side page walk (adapter.go:106-130). Only markers are kept;
+    * over HTTP the server still ships whole pages (the CTS list API has
+    * no marker-only call), so a walk costs one request per page. The
+    * walk sends the same `limit`/`tFrom`/`tTo` as the executor reads: a
+    * live endpoint's chain depends on them, and a chain walked without
+    * them could point past traces the limited reads never see. */
+  def walkMarkers(dir: String, token: Option[String] = None,
+                  limit: Option[Int] = None, tFrom: Option[Long] = None,
+                  tTo: Option[Long] = None,
+                  start: String = FirstMarker): Vector[String] = {
     val markers = ArrayBuffer.empty[String]
-    var m = FirstMarker
+    var m = start
     var done = false
     while (!done) {
-      fetchPage(dir, m, token) match {
+      fetchPage(dir, m, token, limit, tFrom, tTo) match {
         case None => done = true
         case Some(page) =>
           markers += m
-          m = page.path("meta_data").path("marker").asText("")
+          m = nextMarker(page)
           if (m.isEmpty) done = true
       }
     }
@@ -313,15 +330,28 @@ class CtsScan(dir: String, limit: Int, tFrom: Option[Long], tTo: Option[Long],
   override def description(): String =
     s"CtsScan pages=$dir limit=$limit pushedTimeFrom=$tFrom pushedTimeTo=$tTo"
 
+  /** The chain, walked once per scan: Spark plans a scan's partitions
+    * more than once, and each new query builds a new scan, so a later
+    * action still sees pages appended since this one. */
+  private lazy val markers =
+    CtsSource.walkMarkers(dir, token, Some(limit), tFrom, tTo)
+
   override def toBatch: Batch = this
   override def planInputPartitions(): Array[InputPartition] =
-    CtsSource.walkMarkers(dir, token)
-      .map(m => CtsInputPartition(dir, m, limit, tFrom, tTo, token): InputPartition)
-      .toArray
+    CtsScan.partitions(markers, dir, limit, tFrom, tTo, token)
   override def createReaderFactory(): PartitionReaderFactory = CtsReaderFactory
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new CtsMicroBatchStream(dir, limit, tFrom, tTo, token)
+}
+
+object CtsScan {
+  /** One partition per page: executors fetch and parse the bodies. */
+  def partitions(markers: Seq[String], dir: String, limit: Int,
+                 tFrom: Option[Long], tTo: Option[Long],
+                 token: Option[String]): Array[InputPartition] =
+    markers.map(m => CtsInputPartition(dir, m, limit, tFrom, tTo, token): InputPartition)
+      .toArray
 }
 
 object CtsReaderFactory extends PartitionReaderFactory {
@@ -348,17 +378,39 @@ case class CtsOffset(pages: Int) extends Offset {
 class CtsMicroBatchStream(dir: String, limit: Int,
                           tFrom: Option[Long], tTo: Option[Long],
                           token: Option[String]) extends MicroBatchStream {
+  /** Every marker this stream has seen, in chain order. A chain only
+    * grows at its tail, so the buffer is extended, never re-walked. */
+  private val seen = ArrayBuffer.empty[String]
+
+  private def walk(start: String): Vector[String] =
+    CtsSource.walkMarkers(dir, token, Some(limit), tFrom, tTo, start)
+
+  /** Bring `seen` up to the chain's current end and return its length:
+    * walk from the head while nothing is known, else re-fetch only the
+    * tail page and walk on from its marker if it now has one — one
+    * request per trigger when nothing was appended. */
+  private def extend(): Int = synchronized {
+    if (seen.isEmpty) seen ++= walk(CtsSource.FirstMarker)
+    else CtsSource.fetchPage(dir, seen.last, token, Some(limit), tFrom, tTo)
+      .map(CtsSource.nextMarker).filter(_.nonEmpty)
+      .foreach(next => seen ++= walk(next))
+    seen.length
+  }
+
   override def initialOffset(): Offset = CtsOffset(0)
-  override def latestOffset(): Offset =
-    CtsOffset(CtsSource.walkMarkers(dir, token).length)
+  override def latestOffset(): Offset = CtsOffset(extend())
   override def deserializeOffset(json: String): Offset =
     CtsOffset(CtsSource.parseOffsetJson(json))
+  /** Slices the buffer; extends it first only when it is shorter than
+    * `end`, as when a restarted query replays a checkpointed batch. */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[CtsOffset].pages
     val e = end.asInstanceOf[CtsOffset].pages
-    CtsSource.walkMarkers(dir, token).slice(s, e)
-      .map(m => CtsInputPartition(dir, m, limit, tFrom, tTo, token): InputPartition)
-      .toArray
+    val markers = synchronized {
+      if (seen.length < e) extend()
+      seen.slice(s, e).toVector
+    }
+    CtsScan.partitions(markers, dir, limit, tFrom, tTo, token)
   }
   override def createReaderFactory(): PartitionReaderFactory = CtsReaderFactory
   override def commit(end: Offset): Unit = ()

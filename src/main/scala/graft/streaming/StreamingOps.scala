@@ -185,18 +185,21 @@ object StreamingOps {
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tmpDirs.forEach { root =>
-        // Files.walk returns a Stream holding an open directory handle —
-        // close it per root, or the hook leaks one handle per tmp dir
-        try {
-          val walk = Files.walk(root)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { try Files.deleteIfExists(p) catch { case _: Exception => () } })
-          finally walk.close()
-        } catch { case _: Exception => () }
-      }
+      tmpDirs.forEach(deleteTree(_))
     }, "graft-tmp-cleanup"))
   }
+
+  /** Best-effort recursive delete of `root`; never throws. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
+    // Files.walk returns a Stream holding an open directory handle —
+    // close it per root, or each call leaks one handle
+    try {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { try Files.deleteIfExists(p) catch { case _: Exception => () } })
+      finally walk.close()
+    } catch { case _: Exception => () }
+
   private[graft] def tmp(prefix: String): String = {
     val p = Files.createTempDirectory(prefix)
     tmpDirs.add(p)
@@ -218,7 +221,7 @@ object StreamingOps {
     // in options("path"), not in dataSource.paths.
     val rels = df.queryExecution.analyzed.collect {
       case r: StreamingRelation =>
-        (r.dataSource.paths ++ r.dataSource.options.get("path"),
+        (sourcePaths(r.dataSource.paths, r.dataSource.options),
           r.dataSource.options.get("pathGlobFilter"))
     }
     if (rels.isEmpty) -1L
@@ -239,6 +242,12 @@ object StreamingOps {
       }.sum
     }.sum
   } catch { case _: Exception => -1L }
+
+  /** A file source's paths, each once: `paths` plus `options("path")`,
+    * which may carry the same path a second time. */
+  private[graft] def sourcePaths(paths: Seq[String],
+                                 options: Map[String, String]): Seq[String] =
+    (paths ++ options.get("path")).distinct
 
   /** Feed-per-partition target for [[withDrainParallelism]] — each
     * shuffle/state partition of a drain should own at least this much

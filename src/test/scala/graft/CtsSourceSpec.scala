@@ -314,6 +314,115 @@ class CtsSourceSpec extends AnyFunSuite {
     } finally stub.stop()
   }
 
+  /** Point page 002's marker at a new page 003 holding trace t8 — the
+    * chain grows at its tail, the way a live feed does. */
+  private def appendPage(dir: Path): Unit = {
+    Files.write(dir.resolve("page-003.json"),
+      s"""{"traces":[${trace(8)}],"meta_data":{"count":1,"marker":""}}"""
+        .getBytes(StandardCharsets.UTF_8))
+    val p2 = new String(Files.readAllBytes(dir.resolve("page-002.json")), StandardCharsets.UTF_8)
+    Files.write(dir.resolve("page-002.json"),
+      p2.replace(""""marker":""""", """"marker":"003"""").getBytes(StandardCharsets.UTF_8))
+  }
+
+  test("http: the walk sends the same limit and window as the page reads") {
+    // a live endpoint's marker chain depends on Limit and on the window,
+    // so a walk without them could lead the limited reads past traces
+    val dir = writeFixtures()
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      val from = 1700000000000L + 60000L
+      val rows = spark.read.format("cts")
+        .option("pages", stub.url).option("limit", "2").load()
+        .filter(col("time") >= from && col("time") < from + 6 * 60000L)
+        .collect()
+      assert(rows.map(_.getString(0)).sorted.toSeq === Seq("t1", "t3", "t4", "t6"))
+      val qs = stub.served.toArray.map(_.toString).toSeq
+      assert(qs.size === 6)
+      assert(qs.forall(q => q.contains("limit=2") && q.contains("from=") && q.contains("to=")),
+        s"every request must carry limit, from and to: $qs")
+    } finally stub.stop()
+  }
+
+  test("http: a batch read of N pages serves exactly 2N requests") {
+    // one chain walk per scan (planning asks for partitions more than
+    // once) plus one body read per page
+    val dir = writeFixtures()
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      assert(spark.read.format("cts").option("pages", stub.url).load().count() === 8L)
+      assert(stub.served.size() === 6, s"served: ${stub.served}")
+    } finally stub.stop()
+  }
+
+  test("http: an AvailableNow drain of N pages serves exactly 2N requests") {
+    val dir = writeFixtures()
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      val name = "cts_counted_out"
+      spark.readStream.format("cts").option("pages", stub.url).load()
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+      assert(spark.table(name).count() === 8L)
+      assert(stub.served.size() === 6, s"served: ${stub.served}")
+    } finally stub.stop()
+  }
+
+  test("a new batch read sees a page appended after the previous read") {
+    val dir = writeFixtures()
+    val df = spark.read.format("cts").option("pages", dir.toString).load()
+    assert(df.count() === 8L)
+    appendPage(dir)
+    assert(spark.read.format("cts").option("pages", dir.toString).load().count() === 9L)
+    assert(df.count() === 9L, "a new action on the same frame plans a new scan")
+  }
+
+  test("http: a running ProcessingTime stream picks up an appended page via the tail page") {
+    val dir = writeFixtures()
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    val name = "cts_live_out"
+    val q = spark.readStream.format("cts").option("pages", stub.url).load()
+      .writeStream.format("memory").queryName(name)
+      .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
+      .start()
+    def ids = spark.table(name).collect().map(_.getString(0)).sorted.toSeq
+    try {
+      q.processAllAvailable()
+      assert(ids === (0 to 7).map(i => s"t$i"))
+      appendPage(dir)
+      // a trigger that probed before the append may end the first wait
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!ids.contains("t8") && System.nanoTime() < deadline) q.processAllAvailable()
+      assert(ids === (0 to 8).map(i => s"t$i"))
+    } finally { q.stop(); stub.stop() }
+    // the head page is fetched by the first walk and by its read, never
+    // again: later triggers re-fetch only the tail
+    val head = stub.served.toArray.map(_.toString).count(!_.contains("next="))
+    assert(head === 2, s"served: ${stub.served}")
+  }
+
+  test("http: an offset probe with nothing appended costs exactly one request") {
+    val dir = writeFixtures()
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      val stream = new graft.sources.CtsMicroBatchStream(stub.url, 50, None, None, None)
+      assert(stream.latestOffset() === graft.sources.CtsOffset(3))
+      assert(stub.served.size() === 3, "the first probe walks the chain from its head")
+      assert(stream.latestOffset() === graft.sources.CtsOffset(3))
+      assert(stub.served.size() === 4, "an idle probe re-fetches only the tail page")
+      assert(stub.served.toArray.last.toString.contains("next=002"))
+      appendPage(dir)
+      assert(stream.latestOffset() === graft.sources.CtsOffset(4))
+      assert(stub.served.size() === 6, "tail page plus the one appended page")
+      stream.planInputPartitions(graft.sources.CtsOffset(0), graft.sources.CtsOffset(4))
+      assert(stub.served.size() === 6, "planning slices the seen markers")
+    } finally stub.stop()
+  }
+
   test("offset deserialization parses the envelope field and rejects garbage") {
     assert(CtsSource.parseOffsetJson("""{"pages":7}""") === 7)
     assert(intercept[IllegalArgumentException] {

@@ -152,4 +152,18 @@ class ExporterSpec extends AnyFunSuite {
     assert(ls.size === 5)
     assert(ls.forall(_.startsWith("""{"id":"t""")))
   }
+
+  test("streaming cycles leave no checkpoint dir behind") {
+    def ckpts(): Set[String] =
+      Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
+        .iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("exporter-ckpt-")).toSet
+    val before = ckpts()
+    val out = Files.createTempDirectory("exporter-out-").toString
+    assert(Exporter.run(spark, Exporter.Config(fixtures().toString, out, streams = true))
+      === Some(graft.operators.CloudEventSink.Delivery(5, 0)))
+    Exporter.run(spark,
+      Exporter.Config(fixtures().toString, out, streams = true, pushAndPull = false))
+    assert(ckpts() -- before === Set.empty)
+  }
 }

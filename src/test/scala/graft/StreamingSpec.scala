@@ -732,6 +732,12 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingOps.drainPartitions(512, 100L * T) === 100)
   }
 
+  test("a file source's path counts once when it rides in both paths and options") {
+    assert(StreamingOps.sourcePaths(Seq("/feed"), Map("path" -> "/feed")) === Seq("/feed"))
+    assert(StreamingOps.sourcePaths(Seq.empty, Map("path" -> "/feed")) === Seq("/feed"))
+    assert(StreamingOps.sourcePaths(Seq("/a", "/b"), Map("path" -> "/a")) === Seq("/a", "/b"))
+  }
+
   test("withDrainParallelism scopes the partition override to the drain and restores the session conf") {
     val spark = TestSpark.spark
     val key = "spark.sql.shuffle.partitions"
