@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.util.LongAccumulator
 
 /** CloudEvent delivery stage — the reference's K1/K2 HTTP sink re-expressed
   * Spark-natively (pkg/adapter/adapter.go:140-156 batch SendEvents,
@@ -13,14 +14,15 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
   *
   * Shape: events serialize to their JSON envelope in the plan (codegen'd
   * to_json Project), then `foreachPartition` drives a pluggable transport —
-  * one transport instance per partition (≙ one HTTP connection per task,
-  * where the Go code POSTs per event on one goroutine: batching by
-  * partition is the scale fix for the reference's main perf flaw, SURVEY
-  * §4). Per-event failures are isolated and COUNTED, never thrown — the
-  * multierror accumulation + IsACK sent-count of adapter.go:146-151 (F4)
-  * becomes a pair of Spark accumulators (C4), readable on the driver after
-  * the job. Delivery is at-least-once; the receiving side is idempotent
-  * (MERGE semantics, §2.5), matching the reference's contract.
+  * one transport instance per partition (where the Go code POSTs per event
+  * on one goroutine: batching by partition is the scale fix for the
+  * reference's main perf flaw, SURVEY §4). Per-event failures are isolated
+  * and COUNTED, never thrown — the multierror accumulation + IsACK
+  * sent-count of adapter.go:146-151 (F4) becomes a per-partition tally
+  * that the task adds to a pair of Spark accumulators (C4), readable on
+  * the driver after the job. Delivery is at-least-once; the receiving side
+  * is idempotent (MERGE semantics, §2.5), matching the reference's
+  * contract.
   */
 object CloudEventSink {
 
@@ -28,8 +30,8 @@ object CloudEventSink {
     * (connection setup) with the (batchId, partitionId) identity of the
     * delivery attempt — an idempotent transport keys its effect on that
     * pair, so an at-least-once redelivery REPLACES the previous attempt
-    * instead of duplicating it; `send` returns the ACK (F4); `close`
-    * flushes. */
+    * instead of duplicating it; `send` returns the ACK (F4);
+    * `sendPartition` delivers a partition's events; `close` flushes. */
   trait EventTransport extends Serializable {
     /** Driver-side hook, called once per delivery attempt BEFORE any
       * partition task runs: an idempotent transport clears leftovers of a
@@ -39,6 +41,18 @@ object CloudEventSink {
     def beginDelivery(deliveryId: Long): Unit = ()
     def open(partitionId: Int, batchId: Long): Unit = ()
     def send(eventJson: String): Boolean
+    /** Deliver one partition's events between `open` and `close` and
+      * return the partition's tally, counted on the calling (task)
+      * thread. A NACK or an exception fails that one event, and the rest
+      * go on (C4). The default sends them one by one. */
+    def sendPartition(events: Iterator[String]): Delivery = {
+      var sent, failed = 0L
+      events.foreach { e =>
+        try { if (send(e)) sent += 1 else failed += 1 }
+        catch { case scala.util.control.NonFatal(_) => failed += 1 }
+      }
+      Delivery(sent, failed)
+    }
     def close(): Unit = ()
   }
 
@@ -114,23 +128,30 @@ object CloudEventSink {
     val sent = sc.longAccumulator("ce_sent")
     val failed = sc.longAccumulator("ce_failed")
     transport.beginDelivery(deliveryId)
-    toEnvelope(ce).foreachPartition { (rows: Iterator[Row]) =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      transport.open(pid, deliveryId)
-      try rows.foreach { r =>
-        try { if (transport.send(r.getString(0))) sent.add(1) else failed.add(1) }
-        catch { case scala.util.control.NonFatal(_) => failed.add(1) }
-      } finally transport.close()
-    }
+    deliverPartitions(toEnvelope(ce), transport, deliveryId, sent, failed)
     Delivery(sent.value, failed.value)
   }
+
+  /** One `foreachPartition` job: each task opens the transport, sends its
+    * partition, adds the tally to the accumulators and closes. */
+  private def deliverPartitions(envelopes: DataFrame, transport: EventTransport,
+                                deliveryId: Long, sent: LongAccumulator,
+                                failed: LongAccumulator): Unit =
+    envelopes.foreachPartition { (rows: Iterator[Row]) =>
+      transport.open(org.apache.spark.TaskContext.getPartitionId(), deliveryId)
+      try {
+        val d = transport.sendPartition(rows.map(_.getString(0)))
+        sent.add(d.sent)
+        failed.add(d.failed)
+      } finally transport.close()
+    }
 
   /** Handle on a running streaming delivery: the query plus live access to
     * the F4/C4 accounting (accumulators keep counting across batches; read
     * `delivery` after `query.awaitTermination()` for the final tally). */
   case class StreamingDelivery(query: StreamingQuery,
-                               private val sentAcc: org.apache.spark.util.LongAccumulator,
-                               private val failedAcc: org.apache.spark.util.LongAccumulator) {
+                               private val sentAcc: LongAccumulator,
+                               private val failedAcc: LongAccumulator) {
     def delivery: Delivery = Delivery(sentAcc.value, failedAcc.value)
   }
 
@@ -147,14 +168,7 @@ object CloudEventSink {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         transport.beginDelivery(batchId) // foreachBatch body runs driver-side
-        batch.foreachPartition { (rows: Iterator[Row]) =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          transport.open(pid, batchId)
-          try rows.foreach { r =>
-            try { if (transport.send(r.getString(0))) sent.add(1) else failed.add(1) }
-            catch { case scala.util.control.NonFatal(_) => failed.add(1) }
-          } finally transport.close()
-        }
+        deliverPartitions(batch, transport, batchId, sent, failed)
       }
     StreamingDelivery(w.start(), sent, failed)
   }

@@ -3,6 +3,9 @@ package graft.operators
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.CompletableFuture
+
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -20,18 +23,25 @@ import com.fasterxml.jackson.databind.node.ObjectNode
   *  - STRUCTURED: the whole JSON envelope IS the body under
   *    `Content-Type: application/cloudevents+json`.
   *
-  * ACK ≙ 2xx (`cloudevents.IsACK`, adapter.go:146): `send` returns false
-  * on any non-2xx or transport error and the sink's F4/C4 accounting
-  * counts it failed without killing the job.
+  * ACK ≙ 2xx (`cloudevents.IsACK`, adapter.go:146): a non-2xx response
+  * or a transport error fails that one event, and the sink's F4/C4
+  * accounting counts it without killing the job.
   *
-  * Scale shape: ONE HttpClient per partition task (`open`), keep-alive
-  * connection reuse across that partition's events — per-event POST is
-  * the reference's semantics (its main perf flaw, SURVEY §4), but the
-  * connection itself is amortized per task, so a 1000-executor run makes
-  * O(partitions) connections, not O(events). Delivery over HTTP is
-  * at-least-once exactly as in the reference: a redelivered batch
-  * re-POSTs and the RECEIVER's MERGE idempotency (§2.5) collapses it —
-  * unlike `NdjsonDirTransport`, there is no replace-previous-attempt
+  * Scale shape: every task POSTs over ONE JVM-wide keep-alive
+  * `HttpClient`, whose connection pool and selector thread outlive the
+  * task, so a micro-batch builds no client of its own. Per-event POST is
+  * the reference's semantics (its main perf flaw, SURVEY §4), but a task
+  * does not wait for one round trip before the next POST:
+  * `sendPartition` pipelines them with `sendAsync`, at most
+  * `POSTS_IN_FLIGHT` at a time, waits for them all before it returns,
+  * and tallies the ACKs on the task thread (`send` is a one-event
+  * partition, so there is one POST path). So a partition's events arrive
+  * in no fixed order. The CE HTTP binding promises none, and every
+  * receiver here MERGEs by event identity. `timeoutMs` bounds each
+  * request; the connect timeout is the shared client's (10 s). Delivery
+  * over HTTP is at-least-once exactly as in the reference: a redelivered
+  * batch re-POSTs and the RECEIVER's MERGE idempotency (§2.5) collapses
+  * it — unlike `NdjsonDirTransport`, there is no replace-previous-attempt
   * strengthening to lean on, which is why every receiver-side pipeline
   * in this repo dedups on content identity.
   *
@@ -41,56 +51,81 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 class HttpCloudEventTransport(url: String, structured: Boolean = false,
                               timeoutMs: Long = 10000)
     extends CloudEventSink.EventTransport {
+  import HttpCloudEventTransport.{client, mapper, POSTS_IN_FLIGHT}
 
-  @transient private var client: HttpClient = _
-  @transient private var mapper: ObjectMapper = _
-
-  override def open(partitionId: Int, batchId: Long): Unit = {
-    client = HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofMillis(timeoutMs)).build()
-    mapper = new ObjectMapper()
-  }
-
-  /** Java 17's HttpClient has no close(); dropping the reference lets its
-    * selector thread and pooled connections be collected promptly instead
-    * of riding each micro-batch's transport copy to the next GC. */
-  override def close(): Unit = { client = null; mapper = null }
-
-  override def send(eventJson: String): Boolean = {
+  private def request(eventJson: String): HttpRequest = {
     val builder = HttpRequest.newBuilder(URI.create(url))
       .timeout(java.time.Duration.ofMillis(timeoutMs))
-    val req =
-      if (structured)
-        builder.header("Content-Type", "application/cloudevents+json")
-          .POST(HttpRequest.BodyPublishers.ofString(eventJson, StandardCharsets.UTF_8))
-          .build()
-      else {
-        val node = mapper.readTree(eventJson)
-        require(node.isObject, s"CE envelope must be a JSON object: $eventJson")
-        var body = ""
-        val it = node.properties().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val k = e.getKey
-          if (k == "data") body = mapper.writeValueAsString(e.getValue)
-          else {
-            val v = if (e.getValue.isTextual) e.getValue.asText()
-                    else mapper.writeValueAsString(e.getValue)
-            builder.header(s"ce-$k", HttpCloudEventTransport.encodeHeader(v))
-          }
+    if (structured)
+      builder.header("Content-Type", "application/cloudevents+json")
+        .POST(HttpRequest.BodyPublishers.ofString(eventJson, StandardCharsets.UTF_8))
+        .build()
+    else {
+      val node = mapper.readTree(eventJson)
+      require(node.isObject, s"CE envelope must be a JSON object: $eventJson")
+      var body = ""
+      val it = node.properties().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        val k = e.getKey
+        if (k == "data") body = mapper.writeValueAsString(e.getValue)
+        else {
+          val v = if (e.getValue.isTextual) e.getValue.asText()
+                  else mapper.writeValueAsString(e.getValue)
+          builder.header(s"ce-$k", HttpCloudEventTransport.encodeHeader(v))
         }
-        // the binding's default specversion if the envelope carries none
-        if (!node.has("specversion")) builder.header("ce-specversion", "1.0")
-        builder.header("Content-Type", "application/json")
-          .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
-          .build()
       }
-    val rc = client.send(req, HttpResponse.BodyHandlers.discarding()).statusCode()
-    rc >= 200 && rc < 300
+      // the binding's default specversion if the envelope carries none
+      if (!node.has("specversion")) builder.header("ce-specversion", "1.0")
+      builder.header("Content-Type", "application/json")
+        .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
+        .build()
+    }
+  }
+
+  override def send(eventJson: String): Boolean =
+    sendPartition(Iterator.single(eventJson)).sent == 1
+
+  /** Only this thread counts the POSTs' outcomes: a 2xx ACKs, a non-2xx
+    * response or an exception fails that one event. It waits for the
+    * oldest whenever `POSTS_IN_FLIGHT` are open. An interrupt (a killed
+    * task) cancels the POSTs still open and is rethrown. */
+  override def sendPartition(events: Iterator[String]): CloudEventSink.Delivery = {
+    val inFlight = new java.util.ArrayDeque[CompletableFuture[HttpResponse[Void]]]()
+    var sent, failed = 0L
+    def settleOldest(): Unit = {
+      val oldest = inFlight.poll()
+      val acked =
+        try { val rc = oldest.get().statusCode(); rc >= 200 && rc < 300 }
+        catch {
+          case _: java.util.concurrent.ExecutionException => false
+          case e: InterruptedException =>
+            oldest.cancel(true)
+            inFlight.forEach(_.cancel(true))
+            throw e
+        }
+      if (acked) sent += 1 else failed += 1
+    }
+    events.foreach { e =>
+      if (inFlight.size >= POSTS_IN_FLIGHT) settleOldest()
+      inFlight.add(
+        try client.sendAsync(request(e), HttpResponse.BodyHandlers.discarding())
+        catch { case NonFatal(err) => CompletableFuture.failedFuture(err) })
+    }
+    while (!inFlight.isEmpty) settleOldest()
+    CloudEventSink.Delivery(sent, failed)
   }
 }
 
 object HttpCloudEventTransport {
+  /** POSTs one task keeps in flight. */
+  private[graft] final val POSTS_IN_FLIGHT = 16
+
+  private lazy val client: HttpClient =
+    HttpClient.newBuilder().connectTimeout(java.time.Duration.ofSeconds(10)).build()
+
+  private lazy val mapper = new ObjectMapper()
+
   /** CE HTTP binding header-value encoding: percent-encode octets outside
     * printable ASCII (and '%' itself); everything else passes through. */
   def encodeHeader(v: String): String = {

@@ -57,22 +57,41 @@ class CtsRestStub(pagesDir: String, token: Option[String] = None) {
     * sight without burning the 5xx retry budget (r18 ADVICE). */
   val garbleNext = new java.util.concurrent.atomic.AtomicInteger(0)
 
+  /** Fault injection: a request for one of these markers answers 500
+    * every time — a page that never recovers, so the client's retry
+    * budget for that page runs out while the rest of the chain reads. */
+  val failMarkers: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Milliseconds each request is held before it is answered, so that
+    * overlapping client requests show up in [[maxInFlight]]. */
+  val delayMs = new java.util.concurrent.atomic.AtomicLong(0)
+
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** The most requests this stub has been handling at one time. */
+  val maxInFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+
   private val server = HttpServer.create(
     new java.net.InetSocketAddress("127.0.0.1", 0), 0)
   server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool())
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = {
-      val (rc, body) =
-        try respond(Option(ex.getRequestURI.getRawQuery).getOrElse(""),
-          Option(ex.getRequestHeaders.getFirst("X-Auth-Token")))
-        catch { case scala.util.control.NonFatal(_) => (500, "") }
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      if (rc == 200) {
-        ex.getResponseHeaders.add("Content-Type", "application/json")
-        ex.sendResponseHeaders(200, bytes.length)
-        ex.getResponseBody.write(bytes)
-      } else ex.sendResponseHeaders(rc, -1)
-      ex.close()
+      maxInFlight.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      try {
+        val (rc, body) =
+          try {
+            Thread.sleep(delayMs.get)
+            respond(Option(ex.getRequestURI.getRawQuery).getOrElse(""),
+              Option(ex.getRequestHeaders.getFirst("X-Auth-Token")))
+          } catch { case scala.util.control.NonFatal(_) => (500, "") }
+        val bytes = body.getBytes(StandardCharsets.UTF_8)
+        if (rc == 200) {
+          ex.getResponseHeaders.add("Content-Type", "application/json")
+          ex.sendResponseHeaders(200, bytes.length)
+          ex.getResponseBody.write(bytes)
+        } else ex.sendResponseHeaders(rc, -1)
+        ex.close()
+      } finally inFlight.decrementAndGet()
     }
   })
   server.start()
@@ -87,6 +106,7 @@ class CtsRestStub(pagesDir: String, token: Option[String] = None) {
       .map { kv => val i = kv.indexOf('='); kv.take(i) -> kv.drop(i + 1) }
       .toMap
     val marker = params.getOrElse("next", CtsSource.FirstMarker)
+    if (failMarkers.contains(marker)) return (500, "")
     val path = Paths.get(CtsSource.pagePath(pagesDir, marker))
     if (!Files.exists(path)) return (404, "")
     val page = mapper.readTree(new String(

@@ -21,17 +21,30 @@ class CtsSourceSpec extends AnyFunSuite {
        |"code":"200","user":"{\\"name\\":\\"u$id\\"}","source_ip":"10.0.0.$id"}""".stripMargin.replace("\n", "")
   }
 
+  private def page(dir: Path, marker: String, ids: Seq[Int], next: String): Unit =
+    Files.write(dir.resolve(s"page-$marker.json"),
+      s"""{"traces":[${ids.map(trace).mkString(",")}],
+         |"meta_data":{"count":${ids.size},"marker":"$next"}}""".stripMargin
+        .replace("\n", "").getBytes(StandardCharsets.UTF_8))
+
   /** 3 pages of 3/3/2 traces chained by markers 000→001→002→(end). */
   private def writeFixtures(): Path = {
-    def page(dir: Path, marker: String, ids: Seq[Int], next: String): Unit =
-      Files.write(dir.resolve(s"page-$marker.json"),
-        s"""{"traces":[${ids.map(trace).mkString(",")}],
-           |"meta_data":{"count":${ids.size},"marker":"$next"}}""".stripMargin
-          .replace("\n", "").getBytes(StandardCharsets.UTF_8))
     val dir = Files.createTempDirectory("cts-pages-")
     page(dir, "000", Seq(0, 1, 2), "001")
     page(dir, "001", Seq(3, 4, 5), "002")
     page(dir, "002", Seq(6, 7), "")
+    dir
+  }
+
+  private def marker(i: Int) = f"$i%03d"
+
+  /** `n` pages of 3 traces each, page i holding traces 3i..3i+2, chained
+    * by markers 000→001→…→(end). */
+  private def writeChain(n: Int): Path = {
+    val dir = Files.createTempDirectory("cts-chain-")
+    (0 until n).foreach { i =>
+      page(dir, marker(i), (3 * i until 3 * i + 3), if (i == n - 1) "" else marker(i + 1))
+    }
     dir
   }
 
@@ -431,5 +444,106 @@ class CtsSourceSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { CtsSource.parseOffsetJson("""{"v":2}""") }
     intercept[IllegalArgumentException] { CtsSource.parseOffsetJson("not json 123") }
     intercept[IllegalArgumentException] { CtsSource.parseOffsetJson("""{"pages":-1}""") }
+  }
+
+  /** Drain a partition reader, returning the trace ids in the order read. */
+  private def readIds(r: org.apache.spark.sql.connector.read.PartitionReader[
+      org.apache.spark.sql.catalyst.InternalRow]): Seq[String] = {
+    val ids = Seq.newBuilder[String]
+    while (r.next()) ids += r.get().getUTF8String(0).toString
+    ids.result()
+  }
+
+  private def reader(url: String, markers: Seq[String], token: Option[String] = None) =
+    graft.sources.CtsReaderFactory.createReader(graft.sources.CtsInputPartition(
+      url, markers.toVector, 50, None, None, token))
+
+  test("http: a 9-page chain at local[4] reads as 4 runs of pages with 2N requests") {
+    val dir = writeChain(9)
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      val runs = graft.sources.CtsScan.partitions((0 until 9).map(marker), 4,
+        stub.url, 50, None, None, None).map(_.asInstanceOf[graft.sources.CtsInputPartition].markers)
+      assert(runs.map(_.size).toSeq === Seq(2, 2, 2, 3))
+      assert(runs.flatten.toSeq === (0 until 9).map(marker), "contiguous runs in chain order")
+      assert(spark.read.format("cts").option("pages", stub.url).load()
+        .rdd.getNumPartitions === 4)
+      stub.served.clear()
+      val http = spark.read.format("cts").option("pages", stub.url).load().collect()
+      assert(stub.served.size() === 18, s"served: ${stub.served}")
+      val file = spark.read.format("cts").option("pages", dir.toString).load().collect()
+      assert(http.length === 27)
+      assert(http.toSeq === file.toSeq, "both read the chain in marker order")
+    } finally stub.stop()
+  }
+
+  test("http: a reader of 20 pages keeps at most READ_AHEAD fetches in flight, rows in order") {
+    val dir = writeChain(20)
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    stub.delayMs.set(30)
+    val r = reader(stub.url, (0 until 20).map(marker))
+    try {
+      assert(readIds(r) === (0 until 60).map(i => s"t$i"))
+      assert(stub.served.size() === 20)
+      assert(stub.maxInFlight.get <= CtsSource.READ_AHEAD,
+        s"${stub.maxInFlight.get} fetches in flight")
+      assert(stub.maxInFlight.get > 1, "page fetches must overlap")
+    } finally { r.close(); stub.stop() }
+  }
+
+  test("http: a page that answers 500 forever fails its run after PAGE_RETRIES + 1 attempts") {
+    val dir = writeChain(9)
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    stub.failMarkers.add("004")
+    val r = reader(stub.url, (0 until 9).map(marker))
+    try {
+      val err = intercept[java.io.IOException](readIds(r))
+      assert(err.getMessage.contains("attempts") && err.getMessage.contains("next=004"),
+        err.getMessage)
+      assert(stub.served.toArray.count(_.toString.contains("next=004")) ===
+        CtsSource.PAGE_RETRIES + 1)
+    } finally { r.close(); stub.stop() }
+  }
+
+  test("http: a 401 inside a run fails the read, never as a short result") {
+    val dir = writeChain(9)
+    val stub = new graft.sources.CtsRestStub(dir.toString, Some("tok-1"))
+    val r = reader(stub.url, (0 until 9).map(marker), Some("wrong"))
+    try {
+      val err = intercept[graft.sources.CtsClientError](readIds(r))
+      assert(err.getMessage.contains("401"), err.getMessage)
+    } finally { r.close(); stub.stop() }
+  }
+
+  test("http: a page deleted between planning and read fails with the vanished error") {
+    val dir = writeChain(9)
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    try {
+      val parts = new graft.sources.CtsScan(stub.url, 50, None, None, None, 4)
+        .planInputPartitions().map(_.asInstanceOf[graft.sources.CtsInputPartition])
+      val holder = parts.find(_.markers.contains("004")).get
+      Files.delete(dir.resolve("page-004.json"))
+      val r = graft.sources.CtsReaderFactory.createReader(holder)
+      try {
+        val err = intercept[java.io.IOException](readIds(r))
+        assert(err.getMessage.contains("'004' vanished"), err.getMessage)
+      } finally r.close()
+    } finally stub.stop()
+  }
+
+  test("http: close() stops a reader's pending fetches; no request follows it") {
+    val dir = writeChain(20)
+    val stub = new graft.sources.CtsRestStub(dir.toString)
+    (1 until 20).foreach(i => stub.failMarkers.add(marker(i)))
+    val r = reader(stub.url, (0 until 20).map(marker))
+    try {
+      // page 000 answers; its neighbours in the window are retrying 500s
+      assert(r.next())
+      r.close()
+      Thread.sleep(200) // let a request already on the wire reach the stub
+      val atClose = stub.served.size()
+      Thread.sleep(1000) // longer than a page's whole retry schedule
+      assert(stub.served.size() === atClose, s"served: ${stub.served}")
+    } finally stub.stop()
   }
 }

@@ -181,4 +181,75 @@ class HttpTransportSpec extends AnyFunSuite {
       assert(envelopes(rx.receivedPath).map(_ - "specversion") === offline)
     } finally rx.stop()
   }
+
+  test("pipelined POSTs are tallied exactly on the task thread, delivery after delivery") {
+    val dir = Files.createTempDirectory("ce-http-tally-").toString
+    // a slow receiver keeps many POSTs of each task open at once
+    val rx = new CeHttpReceiver(dir, reject = js => {
+      Thread.sleep(20)
+      """"id":"(\d+)"""".r.findFirstMatchIn(js).exists(_.group(1).endsWith("3"))
+    })
+    try {
+      val events = ce().repartition(4).cache()
+      val n = events.count()
+      val expectedFail = events.collect().count(r => r.getAs[String]("id").endsWith("3"))
+      assert(expectedFail > 0)
+      (0 until 5).foreach { i =>
+        val d = CloudEventSink.deliver(events, new HttpCloudEventTransport(rx.url), i.toLong)
+        assert(d.sent + d.failed === n, s"delivery $i: $d")
+        assert(d.failed === expectedFail, s"delivery $i: $d")
+      }
+      events.unpersist()
+    } finally rx.stop()
+  }
+
+  test("one shared HttpClient: 50 deliveries start no new selector threads") {
+    def selectors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .map(_.getName).filter(_.matches("HttpClient-\\d+-SelectorManager")).toSet
+    val dir = Files.createTempDirectory("ce-http-shared-").toString
+    val open, maxOpen = new java.util.concurrent.atomic.AtomicInteger(0)
+    val rx = new CeHttpReceiver(dir, reject = _ => {
+      maxOpen.accumulateAndGet(open.incrementAndGet(), math.max)
+      Thread.sleep(20)
+      open.decrementAndGet()
+      false
+    })
+    try {
+      val events = ce().limit(40).coalesce(1).cache()
+      val n = events.count()
+      val transport = new HttpCloudEventTransport(rx.url)
+      assert(CloudEventSink.deliver(events, transport, 0L) === CloudEventSink.Delivery(n, 0))
+      val first = selectors()
+      (1 until 50).foreach { i =>
+        assert(CloudEventSink.deliver(events, transport, i.toLong) === CloudEventSink.Delivery(n, 0))
+      }
+      assert(selectors() -- first === Set.empty[String])
+      assert(maxOpen.get <= HttpCloudEventTransport.POSTS_IN_FLIGHT,
+        s"${maxOpen.get} POSTs in flight from one task")
+      assert(maxOpen.get > 1, "one task's POSTs must overlap")
+      events.unpersist()
+    } finally rx.stop()
+  }
+
+  test("an interrupted delivery stops at once instead of waiting out its open POSTs") {
+    val dir = Files.createTempDirectory("ce-http-kill-").toString
+    val rx = new CeHttpReceiver(dir, reject = _ => { Thread.sleep(3000); false })
+    try {
+      val events = (0 until 40).map(i =>
+        s"""{"specversion":"1.0","id":"$i","source":"s","type":"t"}""")
+      var outcome: Option[Throwable] = None
+      val task = new Thread(() =>
+        try new HttpCloudEventTransport(rx.url).sendPartition(events.iterator)
+        catch { case e: Throwable => outcome = Some(e) })
+      task.start()
+      Thread.sleep(300)
+      val killedAt = System.nanoTime()
+      task.interrupt()
+      task.join(5000)
+      val stopMs = (System.nanoTime() - killedAt) / 1000000
+      assert(!task.isAlive)
+      assert(outcome.exists(_.isInstanceOf[InterruptedException]), s"$outcome")
+      assert(stopMs < 1000, s"took $stopMs ms to stop")
+    } finally rx.stop()
+  }
 }
