@@ -27,26 +27,6 @@ package graft
   * normalized to single-feed rows, a consistent relative metric).
   */
 object Bench {
-  /** Run one `name` sample: l_bpe_train runs with graft.bpe.noMemo set,
-    * so its samples time REAL K-round training (r17 verdict: the
-    * artifact carried a 0.11 s memo read), and the property's prior
-    * value is restored afterwards, so a value set outside Bench
-    * survives. The other BPE rows keep the memo: the warm-up pass
-    * trains it once, so l_bpe_encode/s_bpe_encode time pure encode —
-    * the train/serve cost split a production pipeline actually has. */
-  private[graft] def withBpeNoMemo[T](name: String)(body: => T): T =
-    if (name != "l_bpe_train") body
-    else {
-      val key = "graft.bpe.noMemo"
-      val prior = sys.props.get(key)
-      sys.props(key) = "1"
-      try body
-      finally prior match {
-        case Some(v) => sys.props(key) = v
-        case None    => sys.props.remove(key)
-      }
-    }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession(defaultCpus = 32, logLevel = "ERROR")
@@ -129,8 +109,7 @@ object Bench {
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
     val samples = collection.mutable.Map.empty[String, List[Double]]
     for (pass <- 0 to passes; (name, fn) <- batchQueries) {
-      val t = try withBpeNoMemo(name)(runOnce(fn))
-        catch { case _: Throwable => -1.0 }
+      val t = try runOnce(fn) catch { case _: Throwable => -1.0 }
       if (pass > 0) samples(name) = t :: samples.getOrElse(name, Nil)
     }
     val results = batchQueries.map { case (name, _) =>
@@ -188,68 +167,6 @@ object Bench {
     val streamFields =
       if (!streamOn) ""
       else s""""streaming_total_sec":${j3(streamTotal)},"streaming":$sq,"streaming_rows_per_sec":$sr,"""
-    // AUTO-ISOLATION of flagged rows (r20 verdict task 6): the recurring
-    // s_dedup/q_bucketed_join signature is a row reading slow IN-SUITE
-    // (neighbor-query page-cache/JIT contention) while isolating clean —
-    // and proving that cost a manual round-trip every round. When
-    // SPARK_GRAFT_PREV names the previous round's artifact (same-sf runs
-    // only — a cross-sf compare would flag everything), any row whose
-    // suite number exceeds ratio×prev AND prev+abs margin is re-run
-    // HERE, isolated, min-of-3 through the identical noop methodology,
-    // and both numbers land in the artifact ("isolated": {...}). Opt-in
-    // by env so driver-controlled runs (which never set it) time exactly
-    // the suite they always did.
-    val isolated: Seq[(String, Double)] = sys.env.get("SPARK_GRAFT_PREV") match {
-      case None => Seq.empty
-      case Some(p) =>
-        val ratio = sys.env.getOrElse("SPARK_GRAFT_FLAG_RATIO", "1.3").toDouble
-        val margin = sys.env.getOrElse("SPARK_GRAFT_FLAG_ABS", "0.3").toDouble
-        val txt = try new String(
-            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p)),
-            java.nio.charset.StandardCharsets.UTF_8)
-          catch { case _: Exception => "" }
-        // flat single-level object extractor over OUR OWN artifact format
-        // (names and 3-digit numbers only — nothing nested inside the
-        // "queries"/"streaming" objects)
-        def obj(key: String): Map[String, Double] = {
-          val i = txt.indexOf("\"" + key + "\"")
-          val open = if (i < 0) -1 else txt.indexOf("{", i)
-          val end = if (open < 0) -1 else txt.indexOf("}", open)
-          if (end < 0) Map.empty
-          else txt.substring(open + 1, end).split(",").toSeq.flatMap { kv =>
-            kv.split(":", 2) match {
-              case Array(k, v) =>
-                try Some(k.trim.stripPrefix("\"").stripSuffix("\"") -> v.trim.toDouble)
-                catch { case _: Exception => None }
-              case _ => None
-            }
-          }.toMap
-        }
-        // same-sf guard: the artifact stamps its data dir; a prev run at
-        // another SF (or an unreadable file) disables isolation silently
-        if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Seq.empty
-        else {
-          val prev = obj("queries") ++ obj("streaming")
-          val now = results ++ streamResults.map(t => (t._1, t._2))
-          now.filter { case (n, v) =>
-            v > 0 && prev.get(n).exists(pv =>
-              pv > 0 && v > pv * ratio && v > pv + margin)
-          }.map { case (n, _) =>
-            // same bpe.noMemo discipline as the pass loop (r21 ADVICE): an
-            // isolated l_bpe_train re-run must time REAL training, not the
-            // session memo the suite already trained
-            val ts = (1 to 3).map { _ =>
-              try withBpeNoMemo(n)(runOnce(SparkEntry.queries(n)))
-              catch { case _: Throwable => -1.0 }
-            }
-            n -> (if (ts.forall(_ < 0)) -1.0 else ts.filter(_ >= 0).min)
-          }
-        }
-    }
-    val isoField =
-      if (isolated.isEmpty) ""
-      else isolated.map { case (k, v) => "\"" + k + "\":" + j3(v) }
-        .mkString(""""isolated":{""", ",", "},")
     // POST-loop calibration re-run (r13 verdict): the pre-loop host_cpu
     // fields only bracket the window BEFORE the queries — r13's uniform
     // 1.27× inflation at identical pre-loop calibration read as
@@ -297,7 +214,7 @@ object Bench {
     val sha = gitSha() +
       (if (sys.env.get("SPARK_GRAFT_DIRTY").exists(_.nonEmpty)) "-dirty" else "")
     val calib = s""""host_cpu_sec":${j3(hostCpuSec)},"host_cpu_sec_post":${j3(hostCpuSecPost)},"host_scan_sec":${j3(hostScanSec)},"host_write_sec":${j3(hostWriteSec)}"""
-    val line = s"""{"metric":"total","value":${j3(total)},"unit":"sec","sha":"$sha",$noteField$streamFields$isoField$calib,"queries":$qs,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${j3(total)},"unit":"sec","sha":"$sha",$noteField$streamFields$calib,"queries":$qs,"sf":"$sfDir"}"""
     // The full per-query map goes to a FILE, never to stdout: the
     // driver's stdout capture clips long lines from the HEAD (r19: only
     // 90 of 95 entries and no opening brace survived — "parsed": null

@@ -182,31 +182,51 @@ object Exporter {
   /** Arg/env → Config, factored out of main so the spec can drive the
     * exact config path main uses without main's session lifecycle.
     * `--overrides '{...}'` wins over the GRAFT_CE_OVERRIDES env var —
-    * CLI-explicit beats ambient, the usual precedence. */
+    * CLI-explicit beats ambient, the usual precedence. Exactly two
+    * positional arguments; a missing one, an unknown option or a
+    * non-integer `--from` fails with a usage error naming it. */
   private[graft] def parseArgs(args: Array[String],
                                env: Map[String, String] = sys.env): Config = {
-    val pages = args(0); val out = args(1)
-    val ovIdx = args.indexOf("--overrides")
-    val ovJson =
-      if (ovIdx >= 0) {
-        require(ovIdx + 1 < args.length, "--overrides needs a JSON argument")
-        Some(args(ovIdx + 1))
-      } else env.get("GRAFT_CE_OVERRIDES")
+    val usage = "usage: Exporter <pagesDir> <outDir> [--streams] [--pull-only]" +
+      " [--from <minutes>] [--overrides '{\"k\":\"v\"}']"
+    val opts = collection.mutable.Map.empty[String, String]
+    val positional = Vector.newBuilder[String]
+    var i = 0
+    while (i < args.length) {
+      args(i) match {
+        case f @ ("--streams" | "--pull-only") => opts(f) = ""
+        case f @ ("--from" | "--overrides") =>
+          require(i + 1 < args.length, s"$f needs a value; $usage")
+          i += 1
+          opts(f) = args(i)
+        case f if f.startsWith("--") =>
+          throw new IllegalArgumentException(s"unknown option $f; $usage")
+        case p => positional += p
+      }
+      i += 1
+    }
+    val pos = positional.result()
+    require(pos.length == 2, (pos.length match {
+      case 0 => "missing <pagesDir> and <outDir>"
+      case 1 => "missing <outDir>"
+      case _ => s"unexpected argument ${pos(2)}"
+    }) + s"; $usage")
     // CTS_FROM precedence parity (main.go:87-94): a nonzero --from flag
     // wins over the env var; the flag path is range-checked at config
     // time exactly as fromInRange does (main.go:210-216). The env path
     // is checked too — stricter than the reference, which validates only
     // the flag (an env-injected 0 would make its ticker panic anyway).
-    val fmIdx = args.indexOf("--from")
-    val fromMinutes =
-      (if (fmIdx >= 0) {
-        require(fmIdx + 1 < args.length, "--from needs a minutes argument")
-        Some(args(fmIdx + 1))
-      } else env.get("GRAFT_CTS_FROM")).map(_.toInt)
-    Config(pages, out,
-      streams = args.contains("--streams"),
-      pushAndPull = !args.contains("--pull-only"),
-      overrides = ovJson.fold(Map.empty[String, String])(parseOverrides),
+    val fromMinutes = opts.get("--from").map(v => (v, "--from"))
+      .orElse(env.get("GRAFT_CTS_FROM").map(v => (v, "GRAFT_CTS_FROM")))
+      .map { case (v, src) =>
+        v.toIntOption.getOrElse(throw new IllegalArgumentException(
+          s"$src must be an integer number of minutes, got '$v'; $usage"))
+      }
+    Config(pos(0), pos(1),
+      streams = opts.contains("--streams"),
+      pushAndPull = !opts.contains("--pull-only"),
+      overrides = opts.get("--overrides").orElse(env.get("GRAFT_CE_OVERRIDES"))
+        .fold(Map.empty[String, String])(parseOverrides),
       fromMinutes = fromMinutes)
   }
 

@@ -144,6 +144,34 @@ class ExporterSpec extends AnyFunSuite {
     assert(lines(out2).isEmpty)
   }
 
+  test("parseArgs: fewer than two positional arguments is a usage error naming the missing one") {
+    val none = intercept[IllegalArgumentException](Exporter.parseArgs(Array(), env = Map()))
+    assert(none.getMessage.contains("missing <pagesDir>"), none.getMessage)
+    val one = intercept[IllegalArgumentException](
+      Exporter.parseArgs(Array("p", "--streams"), env = Map()))
+    assert(one.getMessage.contains("missing <outDir>"), one.getMessage)
+    assert(one.getMessage.contains("usage: Exporter"), one.getMessage)
+    val three = intercept[IllegalArgumentException](
+      Exporter.parseArgs(Array("p", "o", "x"), env = Map()))
+    assert(three.getMessage.contains("unexpected argument x"), three.getMessage)
+    // flags and their values are not positional, wherever they sit
+    val cfg = Exporter.parseArgs(Array("--from", "5", "p", "--pull-only", "o"), env = Map())
+    assert((cfg.pages, cfg.outDir, cfg.fromMinutes, cfg.pushAndPull) === (("p", "o", Some(5), false)))
+  }
+
+  test("parseArgs: a non-integer --from is a usage error naming the option") {
+    val flag = intercept[IllegalArgumentException](
+      Exporter.parseArgs(Array("p", "o", "--from", "abc"), env = Map()))
+    assert(flag.getMessage.contains("--from must be an integer number of minutes, got 'abc'"),
+      flag.getMessage)
+    val envVar = intercept[IllegalArgumentException](
+      Exporter.parseArgs(Array("p", "o"), env = Map("GRAFT_CTS_FROM" -> "1h")))
+    assert(envVar.getMessage.contains("GRAFT_CTS_FROM"), envVar.getMessage)
+    val unknown = intercept[IllegalArgumentException](
+      Exporter.parseArgs(Array("p", "o", "--form", "5"), env = Map()))
+    assert(unknown.getMessage.contains("unknown option --form"), unknown.getMessage)
+  }
+
   test("streaming toggle (C6) delivers the same events through writeStream") {
     val out = Files.createTempDirectory("exporter-out-").toString
     Exporter.run(spark,

@@ -774,6 +774,50 @@ class LlmOpsSpec extends AnyFunSuite {
     spark.catalog.clearCache()
   }
 
+  test("rewritten input: every memoized row answers for the new corpus after clearCache") {
+    // two disjoint halves of the corpus; `a` starts as one half, is read
+    // by every memoized row, then rewritten with the other half in place
+    // — as a Spark-written dir and as one file replaced at the same path.
+    // After the harness clearCache, each row on `a` must equal the same
+    // row on `b`: no memo may serve the corpus that was there before.
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val rows = Seq("l_bpe_vocab", "l_bpe_encode", "l_winnow", "l_dup_spans",
+      "l_dup_spans_keep1")
+    def answer(q: String, dir: String) =
+      LlmOps.queries(q)(spark, dir).collect().map(_.toString).sorted.toSeq
+    val all = Tables.documents(spark, d)
+    def half(parity: Int) = {
+      val dir = graft.streaming.StreamingOps.tmp("rewrite-half-")
+      all.filter(col("doc_id") % 2 === parity).coalesce(1)
+        .write.parquet(s"$dir/documents.parquet")
+      dir
+    }
+    def partFile(dir: String) = Files.list(Paths.get(s"$dir/documents.parquet"))
+      .filter(_.getFileName.toString.endsWith(".parquet")).findFirst().get
+    val (a0, b) = (half(0), half(1))
+    // each layout writes the corpus of one dir into `a`'s documents.parquet
+    val layouts = Seq[(String, (String, String) => Unit)](
+      "spark-written dir" -> { (src, a) =>
+        spark.read.parquet(s"$src/documents.parquet")
+          .write.mode("overwrite").parquet(s"$a/documents.parquet") },
+      "single file replaced in place" -> { (src, a) =>
+        Files.copy(partFile(src), Paths.get(s"$a/documents.parquet"),
+          StandardCopyOption.REPLACE_EXISTING) })
+    layouts.foreach { case (layout, put) =>
+      val a = graft.streaming.StreamingOps.tmp("rewrite-a-")
+      put(a0, a)
+      val before = rows.map(q => q -> answer(q, a)).toMap
+      put(b, a)
+      spark.catalog.clearCache()
+      rows.foreach { q =>
+        val want = answer(q, b)
+        assert(want != before(q), s"$q: the halves must answer differently")
+        assert(answer(q, a) == want, s"$q ($layout): served the corpus before the rewrite")
+      }
+    }
+    spark.catalog.clearCache()
+  }
+
   test("ivfpq: shortlist re-rank is exact-metric and bounded by the IVF probe") {
     // the composed row's contract: (1) per query exactly ranks 1..3 with
     // exact cosine non-increasing; (2) ivfpq searches a SUBSET of the
