@@ -249,7 +249,7 @@ object StreamingOps {
                                  options: Map[String, String]): Seq[String] =
     (paths ++ options.get("path")).distinct
 
-  /** Feed-per-partition target for [[withDrainParallelism]] — each
+  /** Feed-per-partition target for [[drain]] — each
     * shuffle/state partition of a drain should own at least this much
     * source data before another partition is worth its fixed costs.
     * Sizing: a partition's per-trigger fixed cost (state-store commit +
@@ -289,46 +289,54 @@ object StreamingOps {
     math.max(1, math.min(sessionPartitions, derived))
   }
 
-  /** Run one drain (`body` must contain the `.start().awaitTermination()`)
-    * with `spark.sql.shuffle.partitions` set to [[drainPartitions]] of the
-    * frame's [[feedBytes]], restoring the session value afterwards — the
-    * streaming planner snapshots the conf at `.start()`, so the override
-    * scopes to exactly this query; the batch tail every streaming row
-    * runs over its drained sink still plans at session parallelism. */
-  private[graft] def withDrainParallelism[T](df: DataFrame)(body: => T): T = {
-    val s = df.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val bytes = feedBytes(df)
-    if (bytes < 0) body
-    else {
-      val session = try s.conf.get(key).toInt
-        catch { case _: Exception => s.sparkContext.defaultParallelism }
-      val old = s.conf.getOption(key)
-      s.conf.set(key, drainPartitions(session, bytes).toString)
-      try body
-      finally old match {
-        case Some(v) => s.conf.set(key, v)
-        case None    => s.conf.unset(key)
+  /** Serializes the set/start/restore of [[drain]]'s partition override:
+    * two overlapping drains on one session must not each save the other's
+    * override as the value to restore. */
+  private val drainConfLock = new Object
+
+  /** Drain `stream` to completion: checkpoint (a fresh scratch dir unless
+    * the caller passes one to RESTART against — committed offsets and the
+    * batch-id counter then recover), `Trigger.AvailableNow`, `mode`, and
+    * `perBatch` as the `foreachBatch` sink. The query runs at
+    * [[drainPartitions]] of the stream's [[feedBytes]]. The override is
+    * set on the caller's session only across `start()`: the
+    * `StreamExecution` constructor clones the session
+    * (`cloneSession()` into `sparkSessionForStream`) inside `start()`, so
+    * the count is fixed for the whole query — its state partitions and
+    * every `batch.sparkSession` — and the caller's value is back before
+    * `awaitTermination()`. The query still registers on the caller's
+    * `spark.streams`, so its listeners see every drain (a query started
+    * from a cloned session reports to none of them). */
+  private[graft] def drain(stream: DataFrame, mode: String = "append",
+                           checkpoint: String = null)
+                          (perBatch: (DataFrame, Long) => Unit): Unit = {
+    val s = stream.sparkSession
+    val writer = stream.writeStream
+      .option("checkpointLocation", Option(checkpoint).getOrElse(tmp("graft-ckpt-")))
+      .trigger(Trigger.AvailableNow())
+      .outputMode(mode)
+      .foreachBatch(perBatch)
+    val bytes = feedBytes(stream)
+    val query =
+      if (bytes < 0) writer.start()
+      else drainConfLock.synchronized {
+        val key = "spark.sql.shuffle.partitions"
+        val old = s.conf.get(key)
+        s.conf.set(key, drainPartitions(old.toInt, bytes).toString)
+        try writer.start() finally s.conf.set(key, old)
       }
-    }
+    query.awaitTermination()
   }
 
-  /** Drain `df` to completion under AvailableNow into an idempotent
-    * per-batch parquet sink (deterministic `b<batchId>` directory +
-    * overwrite: a redelivered batch rewrites its own directory). Returns
-    * the sink root for batch re-read. */
-  private[graft] def drainToParquet(df: DataFrame, mode: String): String = {
+  /** Drain `df` to completion into an idempotent per-batch parquet sink
+    * (deterministic `b<batchId>` directory + overwrite: a redelivered
+    * batch rewrites its own directory), writing `f` of each micro-batch.
+    * Returns the sink root for batch re-read. */
+  private[graft] def drainToParquet(df: DataFrame, mode: String,
+                                    f: DataFrame => DataFrame = identity): String = {
     val out = tmp("graft-sink-")
-    withDrainParallelism(df) {
-      df.writeStream
-        .option("checkpointLocation", tmp("graft-ckpt-"))
-        .trigger(Trigger.AvailableNow())
-        .outputMode(mode)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/b$batchId")
-        }
-        .start().awaitTermination()
-    }
+    drain(df, mode)((batch, batchId) =>
+      f(batch).write.mode("overwrite").parquet(s"$out/b$batchId"))
     out
   }
 
@@ -398,20 +406,8 @@ object StreamingOps {
     * shared oracle). Same idempotent per-batch directory + overwrite
     * discipline as drainToParquet. Returns the drained sink via
     * [[readDrained]]. */
-  private def drainMapped(stream: DataFrame, f: DataFrame => DataFrame): DataFrame = {
-    val out = tmp("graft-sink-")
-    withDrainParallelism(stream) {
-      stream.writeStream
-        .option("checkpointLocation", tmp("graft-ckpt-"))
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          f(batch).write.mode("overwrite").parquet(s"$out/b$batchId")
-        }
-        .start().awaitTermination()
-    }
-    readDrained(stream, f, out)
-  }
+  private def drainMapped(stream: DataFrame, f: DataFrame => DataFrame): DataFrame =
+    readDrained(stream, f, drainToParquet(stream, "append", f))
 
   /** One micro-batch of the streaming graph materialization
     * ([[drainUpsert]]): the arriving rows take a batch-identical fan-out
@@ -463,16 +459,7 @@ object StreamingOps {
   private def drainUpsert(stream: DataFrame, rows: DataFrame => DataFrame,
                           keys: Seq[String]): DataFrame = {
     val stateDir = tmp("graft-graph-")
-    withDrainParallelism(stream) {
-      stream.writeStream
-        .option("checkpointLocation", tmp("graft-ckpt-"))
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          graphUpsertBatch(batch, batchId, stateDir, rows, keys)
-        }
-        .start().awaitTermination()
-    }
+    drain(stream)(graphUpsertBatch(_, _, stateDir, rows, keys))
     readDrained(stream, rows, stateDir)
   }
 
@@ -794,17 +781,7 @@ object StreamingOps {
   private[graft] def cdcApplyInto(stream: DataFrame, stateDir: String,
                                   checkpointDir: String = null): String = {
     val s = stream.sparkSession
-    withDrainParallelism(stream) {
-      stream.writeStream
-        .option("checkpointLocation",
-          Option(checkpointDir).getOrElse(tmp("graft-cdc-ckpt-")))
-        .trigger(Trigger.AvailableNow())
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          cdcMergeBatch(batch, batchId, stateDir)
-        }
-        .start().awaitTermination()
-    }
+    drain(stream, checkpoint = checkpointDir)(cdcMergeBatch(_, _, stateDir))
     // current state = highest version written (FS-API listing: the state
     // root is hdfs/s3a-portable like every maintained-index dir)
     val vs = numberedDirs(s, stateDir, "v").map(_._1)

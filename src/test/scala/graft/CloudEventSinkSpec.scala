@@ -39,7 +39,7 @@ class CloudEventSinkSpec extends AnyFunSuite {
   }
 
   test("K1 file transport delivers every event exactly once per run") {
-    val out = Files.createTempDirectory("ce-sink-").toString
+    val out = graft.streaming.StreamingOps.tmp("ce-sink-")
     val events = ce()
     val n = events.count()
     val d = CloudEventSink.deliver(events, new CloudEventSink.NdjsonDirTransport(out),
@@ -54,7 +54,7 @@ class CloudEventSinkSpec extends AnyFunSuite {
   }
 
   test("K1 redelivery of the same batch overwrites — no duplicate events") {
-    val out = Files.createTempDirectory("ce-sink-redeliver-").toString
+    val out = graft.streaming.StreamingOps.tmp("ce-sink-redeliver-")
     val events = ce().cache()
     val n = events.count()
     val t = new CloudEventSink.NdjsonDirTransport(out)
@@ -70,7 +70,7 @@ class CloudEventSinkSpec extends AnyFunSuite {
   }
 
   test("K1 successive DISTINCT deliveries accumulate — no silent overwrite") {
-    val out = Files.createTempDirectory("ce-sink-cycles-").toString
+    val out = graft.streaming.StreamingOps.tmp("ce-sink-cycles-")
     val events = ce().cache()
     val n = events.count()
     val t = new CloudEventSink.NdjsonDirTransport(out)
@@ -86,7 +86,7 @@ class CloudEventSinkSpec extends AnyFunSuite {
   }
 
   test("K1 narrower redelivery leaves no stale part files or temp files") {
-    val out = Files.createTempDirectory("ce-sink-narrow-").toString
+    val out = graft.streaming.StreamingOps.tmp("ce-sink-narrow-")
     val events = ce().cache()
     val n = events.count()
     val t = new CloudEventSink.NdjsonDirTransport(out)
@@ -104,12 +104,12 @@ class CloudEventSinkSpec extends AnyFunSuite {
   }
 
   test("K2 streaming delivery ships the same events as batch (at-least-once)") {
-    val out = Files.createTempDirectory("ce-sink-stream-").toString
+    val out = graft.streaming.StreamingOps.tmp("ce-sink-stream-")
     val stream = graft.streaming.StreamingOps.readEventsStream(spark, TestSpark.sfDir)
     val ceStream = CtsParity.toCloudEvents(CtsParity.eventsAsTraces(stream))
     val sd = CloudEventSink.deliverStream(ceStream,
       new CloudEventSink.NdjsonDirTransport(out),
-      Files.createTempDirectory("ce-sink-ckpt-").toString)
+      graft.streaming.StreamingOps.tmp("ce-sink-ckpt-"))
     sd.query.awaitTermination()
     val delivered = Files.list(Paths.get(out)).iterator().asScala
       .filter(_.toString.endsWith(".ndjson"))

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -29,7 +29,7 @@ class CtsSourceSpec extends AnyFunSuite {
 
   /** 3 pages of 3/3/2 traces chained by markers 000→001→002→(end). */
   private def writeFixtures(): Path = {
-    val dir = Files.createTempDirectory("cts-pages-")
+    val dir = Paths.get(graft.streaming.StreamingOps.tmp("cts-pages-"))
     page(dir, "000", Seq(0, 1, 2), "001")
     page(dir, "001", Seq(3, 4, 5), "002")
     page(dir, "002", Seq(6, 7), "")
@@ -41,7 +41,7 @@ class CtsSourceSpec extends AnyFunSuite {
   /** `n` pages of 3 traces each, page i holding traces 3i..3i+2, chained
     * by markers 000→001→…→(end). */
   private def writeChain(n: Int): Path = {
-    val dir = Files.createTempDirectory("cts-chain-")
+    val dir = Paths.get(graft.streaming.StreamingOps.tmp("cts-chain-"))
     (0 until n).foreach { i =>
       page(dir, marker(i), (3 * i until 3 * i + 3), if (i == n - 1) "" else marker(i + 1))
     }
@@ -83,7 +83,7 @@ class CtsSourceSpec extends AnyFunSuite {
     val name = "cts_stream_out"
     val q = spark.readStream.format("cts").option("pages", dir.toString).load()
       .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+      .option("checkpointLocation", graft.streaming.StreamingOps.tmp("cts-ckpt-"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -95,7 +95,7 @@ class CtsSourceSpec extends AnyFunSuite {
 
   test("a restarted stream resumes from the committed marker offset") {
     val dir = writeFixtures()
-    val ckpt = Files.createTempDirectory("cts-ckpt-").toString
+    val ckpt = graft.streaming.StreamingOps.tmp("cts-ckpt-")
     // foreachBatch sink (memory sink cannot recover a checkpoint); the
     // buffer records what each RUN actually delivered
     val delivered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -164,7 +164,7 @@ class CtsSourceSpec extends AnyFunSuite {
     val q = LlmOps.pipelineHead(
       ceDocs(spark.readStream.format("cts").option("pages", dir.toString).load()))
       .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+      .option("checkpointLocation", graft.streaming.StreamingOps.tmp("cts-ckpt-"))
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -295,7 +295,7 @@ class CtsSourceSpec extends AnyFunSuite {
     val dir = writeFixtures()
     val stub = new graft.sources.CtsRestStub(dir.toString, Some("tok-9"))
     try {
-      val ckpt = Files.createTempDirectory("cts-ckpt-").toString
+      val ckpt = graft.streaming.StreamingOps.tmp("cts-ckpt-")
       val delivered = new java.util.concurrent.ConcurrentLinkedQueue[String]()
       def drainOnce(): Unit = {
         val q = spark.readStream.format("cts")
@@ -375,7 +375,7 @@ class CtsSourceSpec extends AnyFunSuite {
       val name = "cts_counted_out"
       spark.readStream.format("cts").option("pages", stub.url).load()
         .writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+        .option("checkpointLocation", graft.streaming.StreamingOps.tmp("cts-ckpt-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
         .awaitTermination()
@@ -399,7 +399,7 @@ class CtsSourceSpec extends AnyFunSuite {
     val name = "cts_live_out"
     val q = spark.readStream.format("cts").option("pages", stub.url).load()
       .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", Files.createTempDirectory("cts-ckpt-").toString)
+      .option("checkpointLocation", graft.streaming.StreamingOps.tmp("cts-ckpt-"))
       .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("100 milliseconds"))
       .start()
     def ids = spark.table(name).collect().map(_.getString(0)).sorted.toSeq

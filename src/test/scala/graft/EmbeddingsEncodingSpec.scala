@@ -1,11 +1,11 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, FloatType}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.streaming.StreamingOps
 
 /** Proactive twin of [[EventsEncodingSpec]] for the OTHER
   * encoding-sensitive testdata column: `embeddings.embedding`. The driver
@@ -30,7 +30,7 @@ class EmbeddingsEncodingSpec extends AnyFunSuite {
     Tables.embeddings(spark, TestSpark.sfDir).cache()
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-emb-").toString
+    StreamingOps.tmp("graft-emb-")
 
   private def writeEmbeddings(df: DataFrame): String = {
     val dir = tmpDir()
@@ -71,11 +71,10 @@ class EmbeddingsEncodingSpec extends AnyFunSuite {
   }
 
   test("the embeddings STREAM loads both encodings identically to batch") {
-    import graft.streaming.StreamingOps
     def drainVecs(dir: String): Seq[(Long, Seq[Float])] = {
-      val out = Files.createTempDirectory("graft-emb-sink-").toString
+      val out = StreamingOps.tmp("graft-emb-sink-")
       StreamingOps.readEmbeddingsStream(spark, dir).writeStream
-        .option("checkpointLocation", Files.createTempDirectory("graft-emb-ck-").toString)
+        .option("checkpointLocation", StreamingOps.tmp("graft-emb-ck-"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .outputMode("append")
         .foreachBatch { (b: DataFrame, id: Long) =>

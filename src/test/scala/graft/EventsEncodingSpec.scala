@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -44,7 +42,7 @@ class EventsEncodingSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toSeq.sorted
 
   private def tmpDir(): String =
-    Files.createTempDirectory("graft-enc-").toString
+    StreamingOps.tmp("graft-enc-")
 
   /** Write `df` as `<dir>/events.parquet` (a part directory — both the
     * batch loader and the streaming source take that layout). */

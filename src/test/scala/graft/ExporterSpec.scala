@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +22,7 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   private def fixtures(): Path = {
-    val dir = Files.createTempDirectory("exporter-pages-")
+    val dir = Paths.get(graft.streaming.StreamingOps.tmp("exporter-pages-"))
     def page(marker: String, ids: Seq[Int], next: String): Unit =
       Files.write(dir.resolve(s"page-$marker.json"),
         s"""{"traces":[${ids.map(trace).mkString(",")}],"meta_data":{"count":${ids.size},"marker":"$next"}}"""
@@ -38,7 +38,7 @@ class ExporterSpec extends AnyFunSuite {
       .flatMap(p => Files.readAllLines(p).asScala).toVector
 
   test("batch exporter delivers every trace as a CloudEvent envelope") {
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     val d = Exporter.run(spark, Exporter.Config(fixtures().toString, out))
     assert(d === Some(graft.operators.CloudEventSink.Delivery(5, 0)))
     val ls = lines(out)
@@ -49,7 +49,7 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   test("K_CE_OVERRIDES: extension overrides merge flat into envelopes") {
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     val d = Exporter.run(spark, Exporter.Config(fixtures().toString, out,
       overrides = Map("region" -> "eu-nl", "status" -> "audited",
                       "pipeline" -> "graft")))
@@ -70,7 +70,7 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   test("pull-only toggle (C5) runs the pipeline without a delivery stage") {
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     val d = Exporter.run(spark,
       Exporter.Config(fixtures().toString, out, pushAndPull = false))
     assert(d === None)
@@ -78,7 +78,7 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   test("overrides naming core CE attributes are rejected, not merged") {
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     val ex = intercept[IllegalArgumentException] {
       Exporter.run(spark, Exporter.Config(fixtures().toString, out,
         overrides = Map("id" -> "boom", "team" -> "data")))
@@ -113,7 +113,7 @@ class ExporterSpec extends AnyFunSuite {
     // K_CE_OVERRIDES deployment parity (adapter.go:57-65): overrides enter
     // as a JSON object via CLI arg or env var, through the SAME parse main
     // uses, and land flat on every delivered envelope
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     val cfg = Exporter.parseArgs(Array(fixtures().toString, out,
       "--overrides", """{"region":"eu-nl","pipeline":"graft"}"""))
     assert(cfg.overrides === Map("region" -> "eu-nl", "pipeline" -> "graft"))
@@ -136,7 +136,7 @@ class ExporterSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Exporter.parseOverrides("""["x"]"""))
     intercept[IllegalArgumentException](Exporter.parseOverrides("""{"k":1}"""))
     // reserved core attributes are rejected through this path too
-    val out2 = Files.createTempDirectory("exporter-out-").toString
+    val out2 = graft.streaming.StreamingOps.tmp("exporter-out-")
     intercept[IllegalArgumentException] {
       Exporter.run(spark, Exporter.parseArgs(Array(fixtures().toString, out2,
         "--overrides", """{"specversion":"2.0"}""")))
@@ -173,7 +173,7 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   test("streaming toggle (C6) delivers the same events through writeStream") {
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     Exporter.run(spark,
       Exporter.Config(fixtures().toString, out, streams = true))
     val ls = lines(out)
@@ -187,7 +187,7 @@ class ExporterSpec extends AnyFunSuite {
         .iterator().asScala.map(_.getFileName.toString)
         .filter(_.startsWith("exporter-ckpt-")).toSet
     val before = ckpts()
-    val out = Files.createTempDirectory("exporter-out-").toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     assert(Exporter.run(spark, Exporter.Config(fixtures().toString, out, streams = true))
       === Some(graft.operators.CloudEventSink.Delivery(5, 0)))
     Exporter.run(spark,

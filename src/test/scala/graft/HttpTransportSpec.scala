@@ -43,7 +43,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("structured-mode round trip delivers every envelope intact") {
-    val dir = Files.createTempDirectory("ce-http-structured-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-structured-")
     val rx = new CeHttpReceiver(dir)
     try {
       val events = ce().cache()
@@ -57,7 +57,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("binary-mode round trip reassembles the same envelope from ce-* headers") {
-    val dir = Files.createTempDirectory("ce-http-binary-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-binary-")
     val rx = new CeHttpReceiver(dir)
     try {
       val events = ce().cache()
@@ -95,7 +95,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("receiver faults surface as failed ACK accounting over the wire (F4/C4)") {
-    val dir = Files.createTempDirectory("ce-http-fault-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-fault-")
     // 503 every envelope whose id ends in '3' — per-event, mid-stream
     val rx = new CeHttpReceiver(dir, reject = js => {
       """"id":"(\d+)"""".r.findFirstMatchIn(js).exists(_.group(1).endsWith("3"))
@@ -116,7 +116,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("K2 streaming delivery over HTTP: foreachBatch posts arrive intact") {
-    val dir = Files.createTempDirectory("ce-http-stream-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-stream-")
     val rx = new CeHttpReceiver(dir)
     try {
       val events = ce().cache()
@@ -135,7 +135,7 @@ class HttpTransportSpec extends AnyFunSuite {
         .select(col("e.*"))
       val sd = CloudEventSink.deliverStream(streamed,
         new HttpCloudEventTransport(rx.url, structured = true),
-        Files.createTempDirectory("ce-http-stream-ckpt-").toString)
+        graft.streaming.StreamingOps.tmp("ce-http-stream-ckpt-"))
       sd.query.awaitTermination()
       assert(sd.delivery === CloudEventSink.Delivery(n, 0))
       assert(envelopes(rx.receivedPath) === sentEnvelopes(events))
@@ -144,7 +144,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("full loop: Exporter over HTTP → receiver → ingest equals direct transform") {
-    val dir = Files.createTempDirectory("ce-http-loop-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-loop-")
     val rx = new CeHttpReceiver(dir)
     try {
       // same two-page marker-chain fixture shape ExporterSpec drives
@@ -155,7 +155,7 @@ class HttpTransportSpec extends AnyFunSuite {
            |"resource_name":"vm-$id","time":$t,"trace_status":"normal",
            |"code":"200","user":"u$id","source_ip":"10.0.0.$id"}""".stripMargin.replace("\n", "")
       }
-      val fixtures = Files.createTempDirectory("http-loop-pages-")
+      val fixtures = Paths.get(graft.streaming.StreamingOps.tmp("http-loop-pages-"))
       def page(marker: String, ids: Seq[Int], next: String): Unit =
         Files.write(fixtures.resolve(s"page-$marker.json"),
           s"""{"traces":[${ids.map(trace).mkString(",")}],"meta_data":{"count":${ids.size},"marker":"$next"}}"""
@@ -167,7 +167,7 @@ class HttpTransportSpec extends AnyFunSuite {
       assert(d.failed === 0 && d.sent > 0)
       // what landed at the receiver == what the offline NDJSON transport
       // would have delivered for the same config
-      val offDir = Files.createTempDirectory("ce-ndjson-ref-").toString
+      val offDir = graft.streaming.StreamingOps.tmp("ce-ndjson-ref-")
       Exporter.run(spark, Exporter.Config(fixtures.toString, offDir))
       val offline = Files.list(Paths.get(offDir)).iterator().asScala
         .filter(_.getFileName.toString.endsWith(".ndjson"))
@@ -183,7 +183,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("pipelined POSTs are tallied exactly on the task thread, delivery after delivery") {
-    val dir = Files.createTempDirectory("ce-http-tally-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-tally-")
     // a slow receiver keeps many POSTs of each task open at once
     val rx = new CeHttpReceiver(dir, reject = js => {
       Thread.sleep(20)
@@ -206,7 +206,7 @@ class HttpTransportSpec extends AnyFunSuite {
   test("one shared HttpClient: 50 deliveries start no new selector threads") {
     def selectors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
       .map(_.getName).filter(_.matches("HttpClient-\\d+-SelectorManager")).toSet
-    val dir = Files.createTempDirectory("ce-http-shared-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-shared-")
     val open, maxOpen = new java.util.concurrent.atomic.AtomicInteger(0)
     val rx = new CeHttpReceiver(dir, reject = _ => {
       maxOpen.accumulateAndGet(open.incrementAndGet(), math.max)
@@ -232,7 +232,7 @@ class HttpTransportSpec extends AnyFunSuite {
   }
 
   test("an interrupted delivery stops at once instead of waiting out its open POSTs") {
-    val dir = Files.createTempDirectory("ce-http-kill-").toString
+    val dir = graft.streaming.StreamingOps.tmp("ce-http-kill-")
     val rx = new CeHttpReceiver(dir, reject = _ => { Thread.sleep(3000); false })
     try {
       val events = (0 until 40).map(i =>

@@ -777,7 +777,8 @@ class LlmOpsSpec extends AnyFunSuite {
   test("rewritten input: every memoized row answers for the new corpus after clearCache") {
     // two disjoint halves of the corpus; `a` starts as one half, is read
     // by every memoized row, then rewritten with the other half in place
-    // — as a Spark-written dir and as one file replaced at the same path.
+    // — as a Spark-written dir, as one file replaced at the same path, and
+    // as a part file deleted and the new corpus added under another name.
     // After the harness clearCache, each row on `a` must equal the same
     // row on `b`: no memo may serve the corpus that was there before.
     import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -802,7 +803,11 @@ class LlmOpsSpec extends AnyFunSuite {
           .write.mode("overwrite").parquet(s"$a/documents.parquet") },
       "single file replaced in place" -> { (src, a) =>
         Files.copy(partFile(src), Paths.get(s"$a/documents.parquet"),
-          StandardCopyOption.REPLACE_EXISTING) })
+          StandardCopyOption.REPLACE_EXISTING) },
+      "part file swapped for another name" -> { (src, a) =>
+        val dir = Files.createDirectories(Paths.get(s"$a/documents.parquet"))
+        dir.toFile.listFiles().foreach(_.delete())
+        Files.copy(partFile(src), dir.resolve(partFile(src).getFileName)) })
     layouts.foreach { case (layout, put) =>
       val a = graft.streaming.StreamingOps.tmp("rewrite-a-")
       put(a0, a)

@@ -200,8 +200,8 @@ class ScaleSpec extends AnyFunSuite {
     val e = (0 until 10000)
       .map(i => ((i % 100).toLong, (i / 100).toDouble))
       .toDF("user_id", "value")
-    val zdir = java.nio.file.Files.createTempDirectory("zord-").toString
-    val ldir = java.nio.file.Files.createTempDirectory("linear-").toString
+    val zdir = graft.streaming.StreamingOps.tmp("zord-")
+    val ldir = graft.streaming.StreamingOps.tmp("linear-")
     Scale.writeZOrdered(e, Seq("user_id", "value"), zdir, nFiles = 16)
     e.repartitionByRange(16, col("user_id")).sortWithinPartitions("user_id")
       .write.mode("overwrite").parquet(ldir)
@@ -237,8 +237,8 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("compact rewrites a fragmented directory into size-targeted files") {
-    val frag = java.nio.file.Files.createTempDirectory("frag-").toString
-    val out = java.nio.file.Files.createTempDirectory("compacted-").toString
+    val frag = graft.streaming.StreamingOps.tmp("frag-")
+    val out = graft.streaming.StreamingOps.tmp("compacted-")
     // fragment: 64 tiny files, the streaming-sink accretion shape
     Tables.events(spark, d).repartition(64).write.mode("overwrite").parquet(frag)
     val fragFiles = new java.io.File(frag).listFiles.count(_.getName.endsWith(".parquet"))
@@ -255,7 +255,7 @@ class ScaleSpec extends AnyFunSuite {
   }
 
   test("date-partitioned writes prune partitions at the scan") {
-    val out = java.nio.file.Files.createTempDirectory("events-part-").toString
+    val out = graft.streaming.StreamingOps.tmp("events-part-")
     Tables.events(spark, d)
       .withColumn("day", to_date(col("ts")))
       .write.mode("overwrite").partitionBy("day").parquet(out)

@@ -13,7 +13,7 @@ class ScaleUpSpec extends AnyFunSuite {
   private val src = TestSpark.sfDir
 
   private lazy val dst: String = {
-    val d = java.nio.file.Files.createTempDirectory("scaleup-test-").toString
+    val d = graft.streaming.StreamingOps.tmp("scaleup-test-")
     ScaleUp.run(spark, src, d, 2)
     d
   }
@@ -135,7 +135,7 @@ class ScaleUpSpec extends AnyFunSuite {
     // would byte-clone copy 0, planting exact cross-copy duplicate vectors.
     // The sign-flip composition must keep every copy distinct while staying
     // orthogonal (self-dot preserved to the ulp).
-    val d = java.nio.file.Files.createTempDirectory("scaleup-period-").toString
+    val d = graft.streaming.StreamingOps.tmp("scaleup-period-")
     ScaleUp.run(spark, src, d, 66)
     val vecStride = o("embeddings").agg(max(col("vec_id"))).head().getLong(0) + 1
     val e = spark.read.parquet(s"$d/embeddings.parquet")

@@ -140,11 +140,11 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CDC: 3-batch incremental merge equals the one-shot batch apply") {
     val e = Tables.events(spark, TestSpark.sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"), col("event_type"))
-    val feedDir = java.nio.file.Files.createTempDirectory("cdc-feed-").toString
+    val feedDir = StreamingOps.tmp("cdc-feed-")
     e.repartition(3).write.mode("overwrite").parquet(feedDir)
     val stream = spark.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", 1).parquet(feedDir)
-    val stateDir = java.nio.file.Files.createTempDirectory("cdc-state-").toString
+    val stateDir = StreamingOps.tmp("cdc-state-")
     val current = StreamingOps.cdcApplyInto(stream, stateDir)
     // the feed really split into multiple micro-batches (else this test
     // proves nothing about cross-batch merging)
@@ -169,7 +169,7 @@ class StreamingSpec extends AnyFunSuite {
     val e = Tables.events(spark, TestSpark.sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"), col("event_type"))
     val (b0, b1) = (e.filter(col("event_id") % 2 === 0), e.filter(col("event_id") % 2 === 1))
-    val stateDir = java.nio.file.Files.createTempDirectory("cdc-redeliver-").toString
+    val stateDir = StreamingOps.tmp("cdc-redeliver-")
     StreamingOps.cdcMergeBatch(b0, 0L, stateDir)
     StreamingOps.cdcMergeBatch(b1, 1L, stateDir)
     val before = spark.read.parquet(s"$stateDir/v1")
@@ -197,9 +197,9 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming CDC: restart from checkpoint resumes versioned state exactly-once") {
     val e = Tables.events(spark, TestSpark.sfDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"), col("event_type"))
-    val feedDir = java.nio.file.Files.createTempDirectory("cdc-restart-feed-").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("cdc-restart-ckpt-").toString
-    val stateDir = java.nio.file.Files.createTempDirectory("cdc-restart-state-").toString
+    val feedDir = StreamingOps.tmp("cdc-restart-feed-")
+    val ckptDir = StreamingOps.tmp("cdc-restart-ckpt-")
+    val stateDir = StreamingOps.tmp("cdc-restart-state-")
     def stream() = spark.readStream.schema(e.schema)
       .option("maxFilesPerTrigger", 1).parquet(feedDir)
     // run 1: first half of the feed, then the query terminates (the
@@ -241,10 +241,10 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val base = "the quick brown fox jumps over the lazy dog and then runs far away home tonight"
     val docSchema = Tables.documents(spark, TestSpark.sfDir).schema
-    val feedDir = java.nio.file.Files.createTempDirectory("admit-feed-")
+    val feedDir = java.nio.file.Paths.get(StreamingOps.tmp("admit-feed-"))
     def writeDocFile(name: String, mtime: Long,
                      rows: Seq[(Long, String)]): Unit = {
-      val staging = java.nio.file.Files.createTempDirectory("admit-stage-")
+      val staging = java.nio.file.Paths.get(StreamingOps.tmp("admit-stage-"))
       rows.map { case (id, text) => (id, text, "en", "web", text.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(staging.toString)
@@ -261,9 +261,9 @@ class StreamingSpec extends AnyFunSuite {
       1L -> (base + " alpha"),
       5L -> "completely different text about spark structured streaming state stores tonight"))
     writeDocFile("b.parquet", 1700000100000L, Seq(2L -> (base + " beta")))
-    val indexDir = java.nio.file.Files.createTempDirectory("admit-index-").toString
-    val admitDir = java.nio.file.Files.createTempDirectory("admit-log-").toString
-    val ckptDir = java.nio.file.Files.createTempDirectory("admit-ckpt-").toString
+    val indexDir = StreamingOps.tmp("admit-index-")
+    val admitDir = StreamingOps.tmp("admit-log-")
+    val ckptDir = StreamingOps.tmp("admit-ckpt-")
     def docs() = spark.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", 1).parquet(feedDir.toString)
     LlmOps.streamNearDupMaintained(docs(), indexDir, admitDir, ckptDir)
@@ -308,7 +308,7 @@ class StreamingSpec extends AnyFunSuite {
     val e = Tables.events(spark, TestSpark.sfDir)
     def nodesOf(b: org.apache.spark.sql.DataFrame) =
       CtsParity.nodes(CtsParity.toCloudEvents(CtsParity.eventsAsTraces(b)))
-    val stateDir = java.nio.file.Files.createTempDirectory("graph-state-").toString
+    val stateDir = StreamingOps.tmp("graph-state-")
     // deterministic micro-batches: later slices re-fan-out dim identities
     // (REGION/STATUS appear from every event) already upserted by batch 0,
     // so the anti-join must do real work
@@ -425,8 +425,8 @@ class StreamingSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     val d = TestSpark.sfDir
     val docs = Tables.documents(spark, d)
-    val idxDir = java.nio.file.Files.createTempDirectory("dupspan-idx-").toString
-    val covDir = java.nio.file.Files.createTempDirectory("dupspan-cov-").toString
+    val idxDir = StreamingOps.tmp("dupspan-idx-")
+    val covDir = StreamingOps.tmp("dupspan-cov-")
     // three deterministic slices ingested as separate micro-batches; the
     // planted mirror docs (id + 100000, and 100000 % 3 == 1) land in a
     // DIFFERENT slice than their originals, so cross-batch duplication is
@@ -503,8 +503,8 @@ class StreamingSpec extends AnyFunSuite {
     // fragment — cancels under canonicalization); docs 5 and 7 are fresh
     def batchOf(rows: (Long, String)*) =
       rows.toSeq.toDF("doc_id", "source")
-    val indexDir = java.nio.file.Files.createTempDirectory("url-index-").toString
-    val admitDir = java.nio.file.Files.createTempDirectory("url-log-").toString
+    val indexDir = StreamingOps.tmp("url-index-")
+    val admitDir = StreamingOps.tmp("url-log-")
     LlmOps.urlAdmitBatch(batchOf(1L -> "web", 5L -> "web"), 0L, indexDir, admitDir)
     LlmOps.urlAdmitBatch(batchOf(401L -> "web", 7L -> "web"), 1L, indexDir, admitDir)
     def verdicts(b: Int) = spark.read.parquet(s"$admitDir/b$b")
@@ -738,19 +738,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(StreamingOps.sourcePaths(Seq("/a", "/b"), Map("path" -> "/a")) === Seq("/a", "/b"))
   }
 
-  test("withDrainParallelism scopes the partition override to the drain and restores the session conf") {
+  test("drain runs the stream at the derived partition count and leaves the caller's conf alone") {
     val spark = TestSpark.spark
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
-    // a real file-source stream over the shared sf dir: feedBytes resolves
-    // through the glob-filtered source, so the drain runs at the derived
-    // (tiny-feed ⇒ 1) partition count and the session value comes back
-    val stream = StreamingOps.readEventsStream(spark, TestSpark.sfDir)
-    var inside = -1
-    StreamingOps.withDrainParallelism(stream) {
-      inside = spark.conf.get(key).toInt
+    // a stateful feed over the shared sf dir: feedBytes resolves through
+    // the glob-filtered source, and the tiny feed derives 1 partition
+    val counts = StreamingOps.readEventsStream(spark, TestSpark.sfDir)
+      .withWatermark("ts", "1 hour")
+      .groupBy(window(col("ts"), "1 hour")).count()
+    val ckpt = StreamingOps.tmp("drain-ckpt-")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    StreamingOps.drain(counts, checkpoint = ckpt) { (batch, _) =>
+      seen.add((batch.sparkSession.conf.get(key), spark.conf.get(key)))
+      batch.count() // every state partition must commit
     }
-    assert(inside === 1, s"tiny feed must drain at 1 partition, got $inside")
-    assert(spark.conf.get(key) === before, "session conf must be restored")
+    assert(!seen.isEmpty, "the drain ran no batch")
+    seen.forEach { case (inBatch, caller) =>
+      assert(inBatch === "1", s"tiny feed must drain at 1 partition, got $inBatch")
+      assert(caller === before, "the caller's session changed while the drain ran")
+    }
+    assert(spark.conf.get(key) === before, "the caller's session changed after the drain")
+    val parts = new java.io.File(s"$ckpt/state/0").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+    assert(parts.length === 1, s"state partitions: ${parts.map(_.getName).toSeq}")
   }
 }
