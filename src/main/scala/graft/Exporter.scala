@@ -25,10 +25,11 @@ object Exporter {
     * extension key is overwritten, a new key is added.
     *
     * `cycle` ≙ the poll-cycle counter of the reference's ticker loop
-    * (main.go:118-150): it becomes the delivery id, so a RETRY of the same
-    * cycle replaces its previous attempt while successive cycles never
-    * collide in the sink. Callers running repeated cycles against one
-    * outDir must increment it. */
+    * (main.go:118-150): it keys the delivery ids
+    * ([[CloudEventSink.deliveryId]], in either mode), so a RETRY of the
+    * same cycle replaces its previous attempt while successive cycles
+    * never collide in the sink. Callers running repeated cycles against
+    * one outDir must increment it. */
   case class Config(pages: String, outDir: String,
                     streams: Boolean = false, pushAndPull: Boolean = true,
                     limit: Int = 50, overrides: Map[String, String] = Map.empty,
@@ -116,8 +117,10 @@ object Exporter {
       .foldLeft(overridden)((df, k) => df.withColumn(k, lit(overrides(k))))
   }
 
-  /** One poll cycle (batch) or a drain-available run (streams=true).
-    * Returns Some(delivery) when pushAndPull enabled. */
+  /** One poll cycle: one sink — delivery (pushAndPull) or `noop` — applied
+    * to the whole frame in batch mode, to each micro-batch of an
+    * AvailableNow drain in stream mode (streams=true). Returns
+    * Some(delivery) when pushAndPull enabled. */
   def run(spark: SparkSession, cfg: Config): Option[CloudEventSink.Delivery] = {
     validate(cfg)
     // K_SINK parity: the reference's sink target is a URL and delivery is
@@ -128,34 +131,21 @@ object Exporter {
       if (cfg.outDir.startsWith("http://") || cfg.outDir.startsWith("https://"))
         new operators.HttpCloudEventTransport(cfg.outDir)
       else new CloudEventSink.NdjsonDirTransport(cfg.outDir)
-    if (!cfg.streams) {
-      val traces = spark.read.format("cts")
-        .option("pages", cfg.pages).option("limit", cfg.limit).load()
-      val ce = toCloudEvents(windowed(traces, cfg), cfg.overrides)
-      if (cfg.pushAndPull) Some(CloudEventSink.deliver(ce, transport, cfg.cycle))
-      else { ce.write.format("noop").mode("overwrite").save(); None }
-    } else {
-      val traces = spark.readStream.format("cts")
-        .option("pages", cfg.pages).option("limit", cfg.limit).load()
-      val ce = toCloudEvents(windowed(traces, cfg), cfg.overrides)
-      // each cycle drains from the head into its own checkpoint, deleted
-      // once the query has terminated so a looping exporter leaves none
-      val ckpt = java.nio.file.Files.createTempDirectory("exporter-ckpt-")
-      try {
-        if (cfg.pushAndPull) {
-          val sd = CloudEventSink.deliverStream(ce, transport, ckpt.toString)
-          sd.query.awaitTermination()
-          Some(sd.delivery)
-        } else {
-          val q = ce.writeStream.format("console")
-            .option("checkpointLocation", ckpt.toString)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          None
-        }
-      } finally graft.streaming.StreamingOps.deleteTree(ckpt)
-    }
+    val source = Map("pages" -> cfg.pages, "limit" -> cfg.limit.toString)
+    val traces =
+      if (cfg.streams) spark.readStream.format("cts").options(source).load()
+      else spark.read.format("cts").options(source).load()
+    val ce = toCloudEvents(windowed(traces, cfg), cfg.overrides)
+    val sink: (DataFrame, Long) => CloudEventSink.Delivery =
+      if (cfg.pushAndPull) CloudEventSink.deliver(_, transport, _)
+      else { (df, _) =>
+        df.write.format("noop").mode("overwrite").save()
+        CloudEventSink.Delivery(0, 0)
+      }
+    val d =
+      if (cfg.streams) CloudEventSink.deliverStream(ce, cfg.cycle)(sink)
+      else sink(ce, CloudEventSink.deliveryId(cfg.cycle, 0))
+    Option.when(cfg.pushAndPull)(d)
   }
 
   /** K_CE_OVERRIDES deployment parity (adapter.go:57-65): the reference

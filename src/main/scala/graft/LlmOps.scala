@@ -1230,8 +1230,14 @@ object LlmOps {
     lmBigrams(corpus)
       .join(model, "bg") // shuffled join: the model grows with the corpus
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_bigrams"),
-        avg(log(col("c2").cast("double") / col("c1").cast("double"))).as("avg_logprob"))
+      .agg(count(lit(1)).as("n_bigrams"), lmAvgLogprob)
+
+  /** Per-doc mean of log(c2/c1), shared by l_lm_score and [[scoreLm]]. The
+    * sum runs exactly in DECIMAL(38,18), each term rounded once by under
+    * 1e-18: a double `avg` varies with the order its partial sums merge. */
+  private def lmAvgLogprob: Column =
+    (sum(log(col("c2").cast("double") / col("c1").cast("double"))
+      .cast("decimal(38,18)")).cast("double") / count(lit(1))).as("avg_logprob")
 
   /** (vec_id, embedding, nrm) corpus frame — norms computed ONCE per
     * vector in the scan projection (not per candidate pair); the dot is
@@ -1268,7 +1274,7 @@ object LlmOps {
   // ---- IVF+PQ composed ANN (l_ivfpq_ann batch row / s_ivfpq_topk
   // streaming serving twin) — see the l_ivfpq_ann entry's docstring for
   // the three-stage design rationale. Factored so the offline index
-  // build (trainIvfPqIndex) and the online scorer (ivfPqScorer) share
+  // build (trainIvfPqIndexWith) and the online scorer (ivfPqScorerWith) share
   // ONE spelling with the batch row: the shared oracle is the proof the
   // served answer equals the batch answer.
   private final val IVFPQ_SUBS = 8
@@ -1396,10 +1402,6 @@ object LlmOps {
     * to its nprobe cells scans 2/K of the index at the FILE level —
     * `PartitionFilters: [cell IN …]`, pinned by PlanAuditSpec — instead
     * of reading all codes and filtering in the join. */
-  private[graft] def trainIvfPqIndex(s: SparkSession, d: String,
-                                     dir: String): Unit =
-    trainIvfPqIndexWith(ivfPqPrep(s, d), s, dir)
-
   private def trainIvfPqIndexWith(
       prep: (DataFrame, Array[(Long, Array[Float], Double)],
         Array[(Long, IndexedSeq[Long])]),
@@ -1491,22 +1493,7 @@ object LlmOps {
       .select(col("q_id"), col("rank"), col("neighbor_id"), col("cosine"))
   }
 
-  /** Online serving scorer over a persisted index: prep (corpus frame +
-    * codebook collects) runs ONCE here, and the returned closure scores
-    * each arriving query micro-batch statelessly — per-query work is
-    * index-probe-bounded, no state store. Per batch, the union of the
-    * queries' nprobe cells rides to the driver as a ≤K-value collect
-    * (the codebook pattern — cells, never data) and becomes a LITERAL
-    * `cell IN (…)` filter on the index scan: against the cell-partitioned
-    * layout trainIvfPqIndex writes, that is STATIC partition pruning —
-    * the probe reads only the probed cells' files (PlanAuditSpec pins
-    * the PartitionFilters entry). Lossless by construction: the ADC join
-    * keeps only cell === q_cell rows, a subset of the filter. */
-  private[graft] def ivfPqScorer(s: SparkSession, d: String,
-                                 indexDir: String): DataFrame => DataFrame =
-    ivfPqScorerWith(ivfPqPrep(s, d), s, indexDir)
-
-  /** [[trainIvfPqIndex]] + [[ivfPqScorer]] for one train-then-serve
+  /** [[trainIvfPqIndexWith]] + [[ivfPqScorerWith]] for one train-then-serve
     * invocation (the s_ivfpq_topk shape) sharing ONE [[ivfPqPrep]]: the
     * centroid and codebook collects are two driver jobs over the pruned
     * embedding scan, and running prep in both halves repeated them —
@@ -1521,6 +1508,18 @@ object LlmOps {
     ivfPqScorerWith(prep, s, indexDir)
   }
 
+  /** Online serving scorer over a persisted index: `prep` (corpus frame
+    * + codebook collects) is computed ONCE by the caller, and the
+    * returned closure scores each arriving query micro-batch
+    * statelessly — per-query work is
+    * index-probe-bounded, no state store. Per batch, the union of the
+    * queries' nprobe cells rides to the driver as a ≤K-value collect
+    * (the codebook pattern — cells, never data) and becomes a LITERAL
+    * `cell IN (…)` filter on the index scan: against the cell-partitioned
+    * layout trainIvfPqIndexWith writes, that is STATIC partition pruning —
+    * the probe reads only the probed cells' files (PlanAuditSpec pins
+    * the PartitionFilters entry). Lossless by construction: the ADC join
+    * keeps only cell === q_cell rows, a subset of the filter. */
   private def ivfPqScorerWith(
       prep: (DataFrame, Array[(Long, Array[Float], Double)],
         Array[(Long, IndexedSeq[Long])]),
@@ -3243,8 +3242,7 @@ object LlmOps {
       bg.join(c2, col("bg") === col("bg2"))
         .join(c1, col("w1") === col("w1c"))
         .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"),
-          avg(log(col("c2").cast("double") / col("c1").cast("double"))).as("avg_logprob"))
+        .agg(count(lit(1)).as("n_bigrams"), lmAvgLogprob)
         .orderBy(col("doc_id"))
     }),
 
@@ -3364,11 +3362,11 @@ object LlmOps {
     // cosine is the siblings' float spelling (tolerance-checked).
     "l_ivfpq_ann" -> ((s, d) => {
       val (e, cents, cb) = ivfPqPrep(s, d)
-      // index built inline here (same spelling trainIvfPqIndex persists);
+      // index built inline here (same spelling trainIvfPqIndexWith persists);
       // the streaming twin s_ivfpq_topk scores over the PERSISTED copy.
       // The rerank bound derives from the index's own cell histogram
       // (override-or-occupancy — one skinny aggregate, the index-build
-      // cost the persisted path pays in trainIvfPqIndex), so the default
+      // cost the persisted path pays in trainIvfPqIndexWith), so the default
       // recall tracks corpus growth instead of decaying with it.
       // persisted: the occupancy aggregate (rerank derivation) and the
       // ADC probe join both consume the assignment — without the persist

@@ -5,8 +5,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
-import org.apache.spark.util.LongAccumulator
+
+import graft.streaming.StreamingOps
 
 /** CloudEvent delivery stage — the reference's K1/K2 HTTP sink re-expressed
   * Spark-natively (pkg/adapter/adapter.go:140-156 batch SendEvents,
@@ -27,7 +27,7 @@ import org.apache.spark.util.LongAccumulator
 object CloudEventSink {
 
   /** One delivery channel. `open` is called once per partition per batch
-    * (connection setup) with the (batchId, partitionId) identity of the
+    * (connection setup) with the (deliveryId, partitionId) identity of the
     * delivery attempt — an idempotent transport keys its effect on that
     * pair, so an at-least-once redelivery REPLACES the previous attempt
     * instead of duplicating it; `send` returns the ACK (F4);
@@ -39,7 +39,7 @@ object CloudEventSink {
       * fewer partitions must not leave the old attempt's extra part files
       * behind). */
     def beginDelivery(deliveryId: Long): Unit = ()
-    def open(partitionId: Int, batchId: Long): Unit = ()
+    def open(partitionId: Int, deliveryId: Long): Unit = ()
     def send(eventJson: String): Boolean
     /** Deliver one partition's events between `open` and `close` and
       * return the partition's tally, counted on the calling (task)
@@ -89,9 +89,9 @@ object CloudEventSink {
         } finally it.close()
       }
     }
-    override def open(partitionId: Int, batchId: Long): Unit = {
+    override def open(partitionId: Int, deliveryId: Long): Unit = {
       Files.createDirectories(Paths.get(dir))
-      dst = Paths.get(dir, f"part-b$batchId%05d-p$partitionId%05d.ndjson")
+      dst = Paths.get(dir, f"part-b$deliveryId%05d-p$partitionId%05d.ndjson")
       tmp = Files.createTempFile(Paths.get(dir), s".${dst.getFileName}.", ".tmp")
       out = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8,
         StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
@@ -108,36 +108,31 @@ object CloudEventSink {
 
   /** Delivery outcome — `sent` is the ACK count the reference returns from
     * SendEvents; `failed` is the multierror cardinality. */
-  case class Delivery(sent: Long, failed: Long)
+  case class Delivery(sent: Long, failed: Long) {
+    def +(o: Delivery): Delivery = Delivery(sent + o.sent, failed + o.failed)
+  }
 
   /** Serialize every column into the CE JSON envelope once, in the plan. */
   private def toEnvelope(ce: DataFrame): DataFrame =
     ce.select(to_json(struct(ce.columns.map(col).toIndexedSeq: _*)).as("event_json"))
 
-  /** K1 — batch delivery with per-event error isolation. A transport
-    * failure marks the event failed and moves on; the job never dies for
-    * one bad event (C4). `deliveryId` identifies the LOGICAL batch for
-    * transport idempotency — a rerun with the SAME id replaces its
-    * previous attempt; distinct deliveries (successive poll cycles,
-    * main.go:118-150) MUST carry distinct ids or they overwrite each
-    * other, which is why there is no default: the caller owns the cycle
-    * counter. */
+  /** K1 — batch delivery with per-event error isolation: one
+    * `foreachPartition` job in which each task opens the transport, sends
+    * its partition, adds the tally to a pair of accumulators and closes.
+    * A transport failure marks the event failed and moves on; the job
+    * never dies for one bad event (C4). `deliveryId` identifies the
+    * LOGICAL batch for transport idempotency — a rerun with the SAME id
+    * replaces its previous attempt; distinct deliveries (successive poll
+    * cycles, main.go:118-150) MUST carry distinct ids or they overwrite
+    * each other, which is why there is no default: the caller owns the
+    * cycle counter. */
   def deliver(ce: DataFrame, transport: EventTransport,
               deliveryId: Long): Delivery = {
     val sc = ce.sparkSession.sparkContext
     val sent = sc.longAccumulator("ce_sent")
     val failed = sc.longAccumulator("ce_failed")
     transport.beginDelivery(deliveryId)
-    deliverPartitions(toEnvelope(ce), transport, deliveryId, sent, failed)
-    Delivery(sent.value, failed.value)
-  }
-
-  /** One `foreachPartition` job: each task opens the transport, sends its
-    * partition, adds the tally to the accumulators and closes. */
-  private def deliverPartitions(envelopes: DataFrame, transport: EventTransport,
-                                deliveryId: Long, sent: LongAccumulator,
-                                failed: LongAccumulator): Unit =
-    envelopes.foreachPartition { (rows: Iterator[Row]) =>
+    toEnvelope(ce).foreachPartition { (rows: Iterator[Row]) =>
       transport.open(org.apache.spark.TaskContext.getPartitionId(), deliveryId)
       try {
         val d = transport.sendPartition(rows.map(_.getString(0)))
@@ -145,35 +140,29 @@ object CloudEventSink {
         failed.add(d.failed)
       } finally transport.close()
     }
-
-  /** Handle on a running streaming delivery: the query plus live access to
-    * the F4/C4 accounting (accumulators keep counting across batches; read
-    * `delivery` after `query.awaitTermination()` for the final tally). */
-  case class StreamingDelivery(query: StreamingQuery,
-                               private val sentAcc: LongAccumulator,
-                               private val failedAcc: LongAccumulator) {
-    def delivery: Delivery = Delivery(sentAcc.value, failedAcc.value)
+    Delivery(sent.value, failed.value)
   }
 
-  /** K2 — streaming delivery: same per-partition transport + accounting
-    * inside foreachBatch (at-least-once; idempotent receiver). Returns the
-    * started query WITH its accounting handle. */
-  def deliverStream(ce: DataFrame, transport: EventTransport,
-                    checkpoint: String): StreamingDelivery = {
-    val sc = ce.sparkSession.sparkContext
-    val sent = sc.longAccumulator("ce_sent_stream")
-    val failed = sc.longAccumulator("ce_failed_stream")
-    val w: DataStreamWriter[Row] = toEnvelope(ce).writeStream
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        transport.beginDelivery(batchId) // foreachBatch body runs driver-side
-        deliverPartitions(batch, transport, batchId, sent, failed)
-      }
-    StreamingDelivery(w.start(), sent, failed)
+  /** The delivery id of micro-batch `batchId` of poll cycle `cycle`; a
+    * batch-mode cycle is its cycle's batch 0. Distinct cycles never share
+    * an id, whatever their mode, while a rerun of a cycle — whose fresh
+    * checkpoint restarts `batchId` at 0 — replaces its own attempt. */
+  def deliveryId(cycle: Long, batchId: Long): Long = {
+    require(batchId < 100000L, s"cycle $cycle ran more than 100000 micro-batches")
+    cycle * 100000L + batchId
   }
 
-  /** K4 — console/debug sink (the event_display of the reference deploy). */
-  def debug(ce: DataFrame, rows: Int = 10): Unit =
-    ce.show(rows, truncate = false)
+  /** K2 — streaming delivery: `ce` drains through [[StreamingOps.drain]]
+    * and `sink` — K1 [[deliver]] over a transport, at-least-once into an
+    * idempotent receiver — runs on each micro-batch, on the driver, under
+    * the micro-batch's [[deliveryId]] in poll cycle `cycle`. Returns the
+    * tallies summed across micro-batches. */
+  def deliverStream(ce: DataFrame, cycle: Long)
+                   (sink: (DataFrame, Long) => Delivery): Delivery = {
+    var total = Delivery(0, 0)
+    StreamingOps.drain(ce) { (batch, batchId) =>
+      total += sink(batch, deliveryId(cycle, batchId))
+    }
+    total
+  }
 }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -180,7 +180,8 @@ object StreamingOps {
     * for recursive deletion at JVM exit — a long-lived session invoking
     * the streaming rows repeatedly must not accumulate disk (r14 ADVICE).
     * Exit-time, not eager: a drained sink is lazily re-read by the
-    * returned verdict frame, so its lifetime is the session's. */
+    * returned verdict frame, so its lifetime is the session's ([[drain]]
+    * deletes and unregisters its own checkpoint, which nothing re-reads). */
   private val tmpDirs =
     new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
   locally {
@@ -190,7 +191,7 @@ object StreamingOps {
   }
 
   /** Best-effort recursive delete of `root`; never throws. */
-  private[graft] def deleteTree(root: java.nio.file.Path): Unit =
+  private def deleteTree(root: java.nio.file.Path): Unit =
     // Files.walk returns a Stream holding an open directory handle —
     // close it per root, or each call leaks one handle
     try {
@@ -306,26 +307,38 @@ object StreamingOps {
     * every `batch.sparkSession` — and the caller's value is back before
     * `awaitTermination()`. The query still registers on the caller's
     * `spark.streams`, so its listeners see every drain (a query started
-    * from a cloned session reports to none of them). */
+    * from a cloned session reports to none of them).
+    *
+    * Checkpoint lifetime: a caller-passed checkpoint is never touched; the
+    * scratch one made here is deleted in a `finally` once the query has
+    * ended (stopped first if the wait is interrupted), so a looping
+    * caller such as the exporter leaves none behind. */
   private[graft] def drain(stream: DataFrame, mode: String = "append",
                            checkpoint: String = null)
                           (perBatch: (DataFrame, Long) => Unit): Unit = {
     val s = stream.sparkSession
+    val ckpt = Option(checkpoint).getOrElse(tmp("graft-ckpt-"))
     val writer = stream.writeStream
-      .option("checkpointLocation", Option(checkpoint).getOrElse(tmp("graft-ckpt-")))
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .outputMode(mode)
       .foreachBatch(perBatch)
     val bytes = feedBytes(stream)
-    val query =
-      if (bytes < 0) writer.start()
-      else drainConfLock.synchronized {
-        val key = "spark.sql.shuffle.partitions"
-        val old = s.conf.get(key)
-        s.conf.set(key, drainPartitions(old.toInt, bytes).toString)
-        try writer.start() finally s.conf.set(key, old)
-      }
-    query.awaitTermination()
+    try {
+      val query =
+        if (bytes < 0) writer.start()
+        else drainConfLock.synchronized {
+          val key = "spark.sql.shuffle.partitions"
+          val old = s.conf.get(key)
+          s.conf.set(key, drainPartitions(old.toInt, bytes).toString)
+          try writer.start() finally s.conf.set(key, old)
+        }
+      try query.awaitTermination() finally query.stop()
+    } finally if (checkpoint == null) {
+      val p = Paths.get(ckpt)
+      deleteTree(p)
+      tmpDirs.remove(p)
+    }
   }
 
   /** Drain `df` to completion into an idempotent per-batch parquet sink
@@ -976,10 +989,10 @@ object StreamingOps {
     // Streaming ANN serving over the PERSISTED compressed index — the
     // billion-vector online path composed end-to-end: the IVF+PQ index
     // (vec_id, cell, codes) is trained once offline
-    // (LlmOps.trainIvfPqIndex — the same train/score seam as langid/
+    // (LlmOps.ivfPqTrainAndServe — the same train/score seam as langid/
     // BM25/LM/semdedup), and each arriving query micro-batch probes its
     // nprobe cells, ADC-scores codes, and exact-re-ranks the shortlist
-    // (LlmOps.ivfPqScorer) — stateless per query, no state store.
+    // (the scorer it returns) — stateless per query, no state store.
     // Shares l_ivfpq_ann's oracle: the proof the SERVED approximate
     // answer equals the batch row over the same index.
     "s_ivfpq_topk" -> ((s, d) => {

@@ -107,16 +107,15 @@ class CloudEventSinkSpec extends AnyFunSuite {
     val out = graft.streaming.StreamingOps.tmp("ce-sink-stream-")
     val stream = graft.streaming.StreamingOps.readEventsStream(spark, TestSpark.sfDir)
     val ceStream = CtsParity.toCloudEvents(CtsParity.eventsAsTraces(stream))
-    val sd = CloudEventSink.deliverStream(ceStream,
-      new CloudEventSink.NdjsonDirTransport(out),
-      graft.streaming.StreamingOps.tmp("ce-sink-ckpt-"))
-    sd.query.awaitTermination()
+    val transport = new CloudEventSink.NdjsonDirTransport(out)
+    val d = CloudEventSink.deliverStream(ceStream, cycle = 0L)(
+      CloudEventSink.deliver(_, transport, _))
     val delivered = Files.list(Paths.get(out)).iterator().asScala
       .filter(_.toString.endsWith(".ndjson"))
       .flatMap(p => Files.readAllLines(p).asScala).size
     val expected = Tables.events(spark, TestSpark.sfDir).count()
     assert(delivered.toLong === expected)
-    assert(sd.delivery === CloudEventSink.Delivery(expected, 0),
+    assert(d === CloudEventSink.Delivery(expected, 0),
       "streaming accounting must report the full tally after termination")
   }
 }

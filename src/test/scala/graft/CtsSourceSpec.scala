@@ -93,6 +93,28 @@ class CtsSourceSpec extends AnyFunSuite {
     assert(streamed.toSeq === batch.toSeq)
   }
 
+  test("a drain of the cts stream keeps the session's partitions and deletes its checkpoint") {
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    def ckpts(): Set[String] =
+      Files.list(Paths.get(System.getProperty("java.io.tmpdir"))).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith("graft-ckpt-")).toSet
+    val before = ckpts()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Set[String])]()
+    val stream = spark.readStream.format("cts").option("pages", writeFixtures().toString).load()
+    graft.streaming.StreamingOps.drain(stream) { (batch, _) =>
+      seen.add((batch.sparkSession.conf.get(key), ckpts() -- before))
+    }
+    assert(!seen.isEmpty, "the drain ran no batch")
+    seen.forEach { case (partitions, made) =>
+      // a DSv2 source has no file feed to size by: the drain must not
+      // override the session's count (a 3-page feed would derive 1)
+      assert(partitions === spark.conf.get(key))
+      assert(made.size === 1, s"the drain's own checkpoint, live while it runs: $made")
+    }
+    assert(ckpts() -- before === Set.empty, "the checkpoint outlived the drain")
+  }
+
   test("a restarted stream resumes from the committed marker offset") {
     val dir = writeFixtures()
     val ckpt = graft.streaming.StreamingOps.tmp("cts-ckpt-")

@@ -70,11 +70,13 @@ class ExporterSpec extends AnyFunSuite {
   }
 
   test("pull-only toggle (C5) runs the pipeline without a delivery stage") {
-    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
-    val d = Exporter.run(spark,
-      Exporter.Config(fixtures().toString, out, pushAndPull = false))
-    assert(d === None)
-    assert(lines(out).isEmpty)
+    for (streams <- Seq(false, true)) {
+      val out = graft.streaming.StreamingOps.tmp("exporter-out-")
+      val d = Exporter.run(spark,
+        Exporter.Config(fixtures().toString, out, streams = streams, pushAndPull = false))
+      assert(d === None, s"streams=$streams")
+      assert(Files.list(Paths.get(out)).count() === 0L, s"streams=$streams wrote into the sink dir")
+    }
   }
 
   test("overrides naming core CE attributes are rejected, not merged") {
@@ -185,7 +187,7 @@ class ExporterSpec extends AnyFunSuite {
     def ckpts(): Set[String] =
       Files.list(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")))
         .iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("exporter-ckpt-")).toSet
+        .filter(_.startsWith("graft-ckpt-")).toSet
     val before = ckpts()
     val out = graft.streaming.StreamingOps.tmp("exporter-out-")
     assert(Exporter.run(spark, Exporter.Config(fixtures().toString, out, streams = true))
@@ -193,5 +195,19 @@ class ExporterSpec extends AnyFunSuite {
     Exporter.run(spark,
       Exporter.Config(fixtures().toString, out, streams = true, pushAndPull = false))
     assert(ckpts() -- before === Set.empty)
+  }
+
+  test("successive stream cycles accumulate in the sink; a rerun of one replaces itself") {
+    val pages = fixtures().toString
+    val out = graft.streaming.StreamingOps.tmp("exporter-out-")
+    def cycle(n: Long): Int = {
+      assert(Exporter.run(spark, Exporter.Config(pages, out, streams = true, cycle = n))
+        === Some(graft.operators.CloudEventSink.Delivery(5, 0)))
+      lines(out).size
+    }
+    assert(cycle(0) === 5)
+    assert(cycle(0) === 5, "a rerun of cycle 0 must replace its own attempt")
+    assert(cycle(1) === 10, "cycle 1 must not overwrite cycle 0's delivery")
+    assert(cycle(1) === 10, "a rerun of cycle 1 must replace its own attempt")
   }
 }

@@ -133,11 +133,10 @@ class HttpTransportSpec extends AnyFunSuite {
       import org.apache.spark.sql.functions._
       val streamed = ms.toDF().select(from_json(col("value"), schema).as("e"))
         .select(col("e.*"))
-      val sd = CloudEventSink.deliverStream(streamed,
-        new HttpCloudEventTransport(rx.url, structured = true),
-        graft.streaming.StreamingOps.tmp("ce-http-stream-ckpt-"))
-      sd.query.awaitTermination()
-      assert(sd.delivery === CloudEventSink.Delivery(n, 0))
+      val transport = new HttpCloudEventTransport(rx.url, structured = true)
+      val d = CloudEventSink.deliverStream(streamed, cycle = 0L)(
+        CloudEventSink.deliver(_, transport, _))
+      assert(d === CloudEventSink.Delivery(n, 0))
       assert(envelopes(rx.receivedPath) === sentEnvelopes(events))
       events.unpersist()
     } finally rx.stop()

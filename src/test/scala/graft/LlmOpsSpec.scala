@@ -124,7 +124,7 @@ class LlmOpsSpec extends AnyFunSuite {
     // the trained index persists its computed bound under _meta, and the
     // underscore keeps it invisible to plain index readers
     val dir = graft.streaming.StreamingOps.tmp("spec-ivfpq-")
-    LlmOps.trainIvfPqIndex(spark, d, dir)
+    LlmOps.ivfPqTrainAndServe(spark, d, dir)
     val meta = spark.read.parquet(s"$dir/_meta").collect()
     assert(meta.length === 1)
     val occ = meta(0).getAs[Long]("max_occupancy")

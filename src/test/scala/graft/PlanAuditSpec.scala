@@ -172,19 +172,19 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("ivfpq serving probe partition-prunes the persisted index to its cells") {
-    // §8.3's layout claim, pinned (r17 verdict task 4): trainIvfPqIndex
+    // §8.3's layout claim, pinned (r17 verdict task 4): ivfPqTrainAndServe
     // writes the index PARTITIONED BY cell, and the serving scorer turns
     // the batch's probed cells into a literal IN filter — the index scan
     // must carry a non-empty PartitionFilters entry (file-level pruning,
     // 2/K of a 100 TB index read) and scan fewer partition dirs than the
     // index has cells.
     val dir = graft.streaming.StreamingOps.tmp("audit-ivfpq-")
-    LlmOps.trainIvfPqIndex(spark, d, dir)
+    val score = LlmOps.ivfPqTrainAndServe(spark, d, dir)
     val nCells = spark.read.parquet(dir).select("cell").distinct().count()
     val queries = Tables.embeddings(spark, d)
       .filter(org.apache.spark.sql.functions.col("vec_id") < 2)
       .select("vec_id", "embedding")
-    val served = LlmOps.ivfPqScorer(spark, d, dir)(queries)
+    val served = score(queries)
     val plan = served.queryExecution.executedPlan.toString
     val pf = "PartitionFilters: \\[[^\\]]*cell[^\\]]*\\]".r.findFirstIn(plan)
     assert(pf.nonEmpty, s"no cell partition filter on the index scan:\n${plan.take(2000)}")

@@ -31,20 +31,16 @@ class SourceAuditSpec extends AnyFunSuite {
     }.toSet
   }
 
-  test(".writeStream appears only in StreamingOps.drain, CloudEventSink.deliverStream and Exporter.run") {
-    assert(sites(".writeStream") === Set(
-      "StreamingOps.scala" -> "drain",
-      "CloudEventSink.scala" -> "deliverStream",
-      "Exporter.scala" -> "run"))
+  test(".writeStream appears only in StreamingOps.drain") {
+    assert(sites(".writeStream") === Set("StreamingOps.scala" -> "drain"))
   }
 
-  test("Files.createTempDirectory appears only in StreamingOps.tmp and two finally-deleted dirs") {
-    // Exporter.run's per-cycle checkpoint and Bench's write kernel delete
-    // their dir in a finally; every other scratch dir goes through
-    // StreamingOps.tmp, whose JVM-exit hook deletes it
+  test("createTempDirectory appears only in StreamingOps.tmp and Bench.writeKernel") {
+    // Bench's write kernel deletes its dir in a finally; every other
+    // scratch dir goes through StreamingOps.tmp, whose JVM-exit hook
+    // deletes it
     assert(sites("createTempDirectory") === Set(
       "StreamingOps.scala" -> "tmp",
-      "Exporter.scala" -> "run",
       "Bench.scala" -> "writeKernel"))
   }
 }
